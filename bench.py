@@ -158,9 +158,9 @@ HEADLINE = [
     "blocklist_scan",      # top-20 phrase collect + one codegen instr pass
     "compression_ratio",   # zlib quality filter: one Arrow pass
     "bq_asymmetric_rank",  # float-query x 1-bit-corpus fold ranking
-    "dbscan_blocked",      # IVF-blocked density clustering + min-label CC
+    "dbscan_blocked",      # IVF-blocked density clustering + hash-to-min CC
     # r11 additions (judge compares shared subset):
-    "dedup_clusters_star", # O(log n) large/small-star CC over jaccard pairs
+    "dedup_clusters_star", # alias of dedup_clusters: hash-to-min CC over jaccard pairs
     "negative_samples",    # word2vec unigram^0.75 table + hash draws
     "perplexity_buckets",  # CCNet head/middle/tail terciles per language
     "dedup_substring_exact",  # two-tier capstone: winnow flag -> SA verify

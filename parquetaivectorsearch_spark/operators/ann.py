@@ -93,13 +93,6 @@ def _nearest(x: np.ndarray, centroids: np.ndarray, n: int = 1) -> np.ndarray:
 # train
 # ---------------------------------------------------------------------------
 
-def max_corpus_norm(corpus: DataFrame, vec_col: str = "embedding") -> float:
-    """max ‖x‖ over the corpus — one distributed agg, one scalar to driver."""
-    from parquetaivectorsearch_spark.functions.vector import l2_norm
-
-    return float(corpus.agg(F.max(l2_norm(vec_col))).first()[0])
-
-
 def train_centroids(corpus: DataFrame, nlist: int, vec_col: str = "embedding",
                     metric: str = "ip", max_norm: float | None = None,
                     sample_cap: int = 65536, seed: int = 42,

@@ -222,17 +222,6 @@ def minhash_candidates(signatures: DataFrame, bands: int = 8) -> DataFrame:
     )
 
 
-def shingle_hash_sets(docs: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", shingle_n: int = 5) -> DataFrame:
-    """(doc_id, g: array<int>): the distinct shingle-hash set per doc, for
-    candidate verification. int set ops are ~10× cheaper than re-intersecting
-    the shingle strings; mod-2^31 collisions among ~1k shingles are
-    negligible for jaccard (see shingle_hash_arrays)."""
-    return shingle_hash_arrays(
-        _spread(docs, id_col), text_col, id_col, shingle_n
-    ).select("doc_id", F.col("hashes").alias("g"))
-
-
 def jaccard_of_hash_sets(ga: Column, gb: Column) -> Column:
     """|a∩b| / (|a|+|b|-|a∩b|) over distinct arrays — one intersect, no
     union-array materialization."""

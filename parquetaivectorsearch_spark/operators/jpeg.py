@@ -269,14 +269,6 @@ def _blockify_grid(plane: np.ndarray, gbh: int, gbw: int) -> np.ndarray:
             .reshape(gbh * gbw, 8, 8))
 
 
-def _blockify(plane: np.ndarray) -> tuple[np.ndarray, int, int]:
-    """(H, W) float plane → (n_blocks, 8, 8) with edge replication; returns
-    (blocks, blocks_h, blocks_w). Block raster order is row-major."""
-    h, w = plane.shape
-    bh, bw = -(-h // 8), -(-w // 8)
-    return _blockify_grid(plane, bh, bw), bh, bw
-
-
 def _box_downsample(plane: np.ndarray, fh: int, fv: int) -> np.ndarray:
     """Chroma downsample by fh×fv box mean (edge-replicated to a multiple
     first) — the plain-average subsampling every baseline encoder is

@@ -162,17 +162,6 @@ def hilbert_sql_ctes(x_expr: str, y_expr: str, key: str,
     return ",\n".join(parts), final
 
 
-def hilbert_repartition(df: DataFrame, x: str, y: str, num_files: int,
-                        h_col: str = "hval", bits: int = 16) -> DataFrame:
-    """Cluster ``df`` for writing along the Hilbert curve — the
-    zorder_repartition twin with strictly better run locality (unit-step
-    curve ⇒ tighter per-file min/max envelopes on BOTH dimensions;
-    quantified in tests/test_layout.py as a bucket bounding-box area
-    comparison against the Morton layout on the same data)."""
-    out = hilbert_index(df, x, y, bits=bits, out_col=h_col)
-    return out.repartitionByRange(num_files, h_col).sortWithinPartitions(h_col)
-
-
 def ntile_two_phase(df: DataFrame, n_tiles: int, order_cols: list[str],
                     out_col: str = "bucket", parts: int = 8) -> DataFrame:
     """``ntile(n_tiles) OVER (ORDER BY order_cols)`` WITHOUT the

@@ -774,7 +774,7 @@ def q_dbscan_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     density-clustering family, composed from the engine's exact pieces
     so it is ORACLE-GATED (rare for clustering): ε-neighborhood pairs
     from the tiled exact cosine θ-join (cosine ≥ 0.35 ≡ ε), core points
-    = ≥ minPts(3, counting self) neighbors, clusters = min-label
+    = ≥ minPts(3, counting self) neighbors, clusters = hash-to-min
     connected components over core-core edges (+ singleton cores),
     border points attach to the min adjacent core cluster, rest is
     noise. Every stage is integer/bit-deterministic arithmetic; the
@@ -795,19 +795,16 @@ def _dbscan_from_pairs(emb: DataFrame, pairs: DataFrame,
                        min_deg: int = 2) -> DataFrame:
     """DBSCAN label assignment given the ε-neighborhood PAIR table —
     shared by the exact (θ-join) and blocked (IVF candidate) variants:
-    cores at degree ≥ min_deg, min-label CC over core-core edges (+
+    cores at degree ≥ min_deg, hash-to-min CC over core-core edges (+
     singleton cores), borders to the min adjacent core cluster, rest
     noise. Output (vec_id, role, cluster).
 
-    The CC stage is hash-to-min path doubling (r15, VERDICT #1 —
-    operators/components.connected_components_hashmin): the sf0.1
-    ε-graph has a ~16-deep component that cost min-label 16
-    diameter-bound rounds; hash-to-min converges in O(log n) rounds at
-    one exchange per round, with the identical component-minimum label
-    contract (equality property-tested), so the oracle-gated
-    dbscan_embeddings replays unchanged."""
+    The CC stage is hash-to-min path doubling
+    (operators/components.connected_components): the sf0.1 ε-graph has a
+    ~16-deep component, which hash-to-min closes in O(log n) rounds at
+    one exchange per round."""
     from parquetaivectorsearch_spark.operators.components import (
-        connected_components_hashmin)
+        connected_components)
 
     # lazy: the ε-pair generator materializes inside the FIRST consuming
     # job (the CC loop's round-1 agg) instead of as its own blocking job;
@@ -820,7 +817,7 @@ def _dbscan_from_pairs(emb: DataFrame, pairs: DataFrame,
     ce = (pairs
           .join(core.withColumnRenamed("v", "vec_a"), "vec_a")
           .join(core.withColumnRenamed("v", "vec_b"), "vec_b"))
-    cc = connected_components_hashmin(ce, a_col="vec_a", b_col="vec_b")
+    cc = connected_components(ce, a_col="vec_a", b_col="vec_b")
     clab = (core.join(cc.withColumnRenamed("doc_id", "v"), "v", "left")
             .select("v", F.coalesce("cluster_id", "v").alias("cluster")))
     bord = (sym.join(clab.withColumnRenamed("v", "vec_b")

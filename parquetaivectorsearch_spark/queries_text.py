@@ -394,12 +394,18 @@ _CLUSTERS_ORACLE = f"""
 """
 
 
+@register("dedup_clusters_star", _CLUSTERS_ORACLE)
 @register("dedup_clusters", _CLUSTERS_ORACLE)
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup clusters: exact-jaccard near-dup pairs (bounded id range) →
-    connected components by min-label propagation (operators/components.py).
-    Oracle: DuckDB recursive CTE computing min reachable id — transitive
-    closure is the one dedup step plain SQL can't do without recursion."""
+    connected components by hash-to-min path doubling
+    (operators/components.py). Oracle: DuckDB recursive CTE computing min
+    reachable id — transitive closure is the one dedup step plain SQL
+    can't do without recursion.
+
+    ``dedup_clusters_star`` is a second registry name for this same
+    query, kept because bench and profile artifacts key on it; it once
+    ran star contraction and now runs the same hash-to-min CC."""
     from parquetaivectorsearch_spark.operators.components import connected_components
 
     # r15 (guide §2.3): code-point-packed gram arrays + the exact
@@ -421,43 +427,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
     )
     return connected_components(pairs)
-
-
-@register("dedup_clusters_star", _CLUSTERS_ORACLE)
-def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clusters, an O(log n) SCALE algorithm: hash-to-min path
-    doubling (Rastogi et al. ICDE 2013,
-    operators/components.connected_components_hashmin; r15 — star
-    contraction remains in operators/components and the test suite as
-    the second log-round family). Min-label converges in O(component
-    diameter) rounds — fine for near-clique dup clusters, silently
-    wrong past max_iter on CHAIN-shaped components (revision chains,
-    sliding-window near-dups); hash-to-min halves chain height per
-    round at ONE exchange per round (star pays four per alternation).
-    Same pair generator and the same recursive-CTE oracle as
-    dedup_clusters: two algorithms, one hash-checked answer."""
-    from parquetaivectorsearch_spark.operators.components import (
-        connected_components_hashmin)
-
-    # r15 (guide §2.3): code-point-packed gram arrays + the exact
-    # integer J ≥ 0.5 gate — one primitive array_intersect per
-    # candidate pair, identical pair set (see ngram_jaccard_pairs)
-    d = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 150)
-        .select("doc_id", TX.char_ngram_codes("text", 3).alias("g"))
-    )
-    a = d.select(F.col("doc_id").alias("doc_a"), F.col("g").alias("ga"))
-    b = d.select(F.col("doc_id").alias("doc_b"), F.col("g").alias("gb"))
-    pairs = (
-        a.join(b, (F.col("doc_a") < F.col("doc_b"))
-               # exact size prefilter (r14, guide §3.2)
-               & (F.least(F.size("ga"), F.size("gb")) * 2
-                  >= F.greatest(F.size("ga"), F.size("gb")))
-               & TX.jaccard_gate_half("ga", "gb"))
-        .select("doc_a", "doc_b")
-    )
-    return connected_components_hashmin(pairs)
 
 
 # ---------------------------------------------------------------------------
@@ -956,8 +925,7 @@ def q_pagerank_simgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = emb.select(F.col("vec_id").alias("dst"), F.col("v").alias("vb"))
     # explicit broadcast of the bounded 200-row side (r15, guide §3.1 /
     # VERDICT #5) — pins the BNLJ build side instead of leaving it to
-    # size estimates; the rank loop below runs with small_ranks=True so
-    # each of the 10 rounds broadcasts the 200-row rank frame too
+    # size estimates
     sims = (
         a.join(F.broadcast(b), F.col("src") != F.col("dst"))
         .select("src", "dst", V.dot("va", "vb").alias("dot"))
@@ -972,12 +940,6 @@ def q_pagerank_simgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = knn3.union(
         knn3.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    # NB (r15 measured negative, VERDICT #5): small_ranks=True (per-round
-    # explicit broadcast of the 200-row rank frame) ran SLOWER than the
-    # default shuffled loop here — min-of-4 alternating 2.77s vs 2.56s:
-    # ten per-round broadcast builds cost more driver work than AQE's
-    # runtime handling of the tiny sort-merge rounds. The operator knob
-    # stays for genuinely bounded-graph callers at cluster scale.
     ranks = pagerank(edges, n_iter=10, damping=0.85)
     return ranks.select(
         F.col("node").alias("vec_id"), F.round("rank", 6).alias("pagerank")
@@ -1773,12 +1735,14 @@ def _kcore_oracle() -> str:
     among survivors(t−1). Monotone-removal recursion is not expressible
     in a recursive CTE (negation over the recursive term), so rounds
     unroll — the random_walks/LPA precedent. Convergence at the fixture
-    within the unroll depth is test-pinned."""
+    within the unroll depth is test-pinned. Every CTE is MATERIALIZED:
+    each peel round reads the previous one twice, so an inlined unroll
+    re-expands the similarity join 2^rounds times."""
     rounds = []
     prev = "s0"
     for t in range(1, _KCORE_ROUNDS + 1):
         rounds.append(f"""
-    s{t} AS (
+    s{t} AS MATERIALIZED (
       SELECT node FROM (
         SELECT e.src AS node, COUNT(*) AS c
         FROM edges e
@@ -1789,26 +1753,26 @@ def _kcore_oracle() -> str:
     )""")
         prev = f"s{t}"
     return f"""
-    WITH base AS (
+    WITH base AS MATERIALIZED (
       SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
       WHERE vec_id < 200
     ),
-    sims AS (
+    sims AS MATERIALIZED (
       SELECT a.vec_id AS src, b.vec_id AS dst,
              list_inner_product(a.v, b.v) AS dot
       FROM base a JOIN base b ON a.vec_id <> b.vec_id
     ),
-    knn AS (
+    knn AS MATERIALIZED (
       SELECT src, dst FROM (
         SELECT src, dst,
                ROW_NUMBER() OVER (PARTITION BY src
                                   ORDER BY dot DESC, dst) AS rn
         FROM sims) t WHERE rn <= 3
     ),
-    edges AS (SELECT DISTINCT src, dst FROM
+    edges AS MATERIALIZED (SELECT DISTINCT src, dst FROM
                 (SELECT src, dst FROM knn
                  UNION ALL SELECT dst AS src, src AS dst FROM knn) u),
-    s0 AS (SELECT src AS node FROM edges GROUP BY src),
+    s0 AS MATERIALIZED (SELECT src AS node FROM edges GROUP BY src),
     {",".join(rounds)}
     SELECT e.src AS node, CAST(COUNT(*) AS BIGINT) AS core_deg
     FROM edges e

@@ -362,90 +362,17 @@ def test_compression_ratio_three_regimes(spark):
     assert rows[4].ratio > 1.0 and rows[4].flagged
 
 
-def test_star_contraction_matches_min_label_on_random_graphs(spark):
-    """connected_components_star must produce EXACTLY the labels of the
-    min-label propagator (cluster_id = component minimum) on random
-    graphs — two algorithms, one answer — validated against a
-    driver-side union-find ground truth."""
+@pytest.mark.parametrize("seed", [19, 23])
+def test_connected_components_matches_union_find(spark, seed):
+    """connected_components must produce EXACTLY the component-minimum
+    labels on random graphs — validated against a driver-side
+    union-find ground truth."""
     import random
 
     from parquetaivectorsearch_spark.operators.components import (
-        connected_components, connected_components_star)
+        connected_components)
 
-    rng = random.Random(19)
-    for trial in range(3):
-        n = 60
-        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(50)]
-        edges = [(a, b) for a, b in edges if a != b]
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            parent[find(a)] = find(b)
-        touched = sorted({x for e in edges for x in e})
-        comp_min = {}
-        for x in touched:
-            r = find(x)
-            comp_min[r] = min(comp_min.get(r, x), x)
-        truth = {x: comp_min[find(x)] for x in touched}
-
-        pairs = spark.createDataFrame(edges, "doc_a BIGINT, doc_b BIGINT")
-        star = {r.doc_id: r.cluster_id
-                for r in connected_components_star(pairs).collect()}
-        label = {r.doc_id: r.cluster_id
-                 for r in connected_components(pairs).collect()}
-        assert star == truth, (trial, star, truth)
-        assert label == truth, (trial, label, truth)
-
-
-def test_star_contraction_logarithmic_on_chain(spark):
-    """The operator's reason to exist: a 256-node PATH component
-    converges in O(log n) alternations (≤ 18) with every node labeled 0
-    — where min-label propagation needs 255 rounds (diameter) and at
-    its default max_iter=25 silently returns WRONG labels."""
-    from parquetaivectorsearch_spark.operators.components import (
-        connected_components, connected_components_star)
-
-    n = 256
-    pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
-                                  "doc_a BIGINT, doc_b BIGINT")
-    stats = {}
-    star = {r.doc_id: r.cluster_id
-            for r in connected_components_star(pairs, stats=stats).collect()}
-    assert star == {i: 0 for i in range(n)}
-    assert stats["rounds"] <= 18, stats
-    # the documented min-label failure mode, pinned so it stays honest
-    label = {r.doc_id: r.cluster_id
-             for r in connected_components(pairs).collect()}
-    assert label != {i: 0 for i in range(n)}
-
-
-def test_star_contraction_empty_input(spark):
-    from parquetaivectorsearch_spark.operators.components import (
-        connected_components_star)
-
-    empty = spark.createDataFrame([], "doc_a BIGINT, doc_b BIGINT")
-    out = connected_components_star(empty)
-    assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == ["doc_id", "cluster_id"]
-
-
-def test_hashmin_matches_min_label_on_random_graphs(spark):
-    """connected_components_hashmin (r15, the third CC family) must
-    produce EXACTLY the component-minimum labels on random graphs —
-    validated against a driver-side union-find ground truth, same
-    contract as the star test above."""
-    import random
-
-    from parquetaivectorsearch_spark.operators.components import (
-        connected_components_hashmin)
-
-    rng = random.Random(23)
+    rng = random.Random(seed)
     for trial in range(3):
         n = 60
         edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(50)]
@@ -469,31 +396,31 @@ def test_hashmin_matches_min_label_on_random_graphs(spark):
 
         pairs = spark.createDataFrame(edges, "doc_a BIGINT, doc_b BIGINT")
         got = {r.doc_id: r.cluster_id
-               for r in connected_components_hashmin(pairs).collect()}
+               for r in connected_components(pairs).collect()}
         assert got == truth, (trial, got, truth)
 
 
 def test_hashmin_logarithmic_on_chain(spark):
-    """Hash-to-min's reason to exist next to min-label: a 256-node PATH
-    (diameter 255, min-label's failure mode at max_iter=25) converges
-    in O(log n) rounds — the paper's 4·log₂ n bound, ≤ 2 extra rounds
-    of blocked-check overshoot — with every node labeled 0. Also pins
-    the permuted-id chain (labels random relative to topology, the
-    regime that defeated pointer jumping in r14)."""
+    """A 256-node PATH (diameter 255 — an O(diameter) propagator would
+    need 255 rounds) converges in O(log n) rounds — the paper's
+    4·log₂ n bound, ≤ 2 extra rounds of blocked-check overshoot — with
+    every node labeled 0 and the fixpoint reported. Also pins the
+    permuted-id chain (labels random relative to topology, the regime
+    that defeated pointer jumping in r14)."""
     import random
 
     from parquetaivectorsearch_spark.operators.components import (
-        connected_components_hashmin)
+        connected_components)
 
     n = 256
     pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
                                   "doc_a BIGINT, doc_b BIGINT")
     stats = {}
     got = {r.doc_id: r.cluster_id
-           for r in connected_components_hashmin(pairs, max_iter=40,
-                                                 stats=stats).collect()}
+           for r in connected_components(pairs, max_iter=40,
+                                         stats=stats).collect()}
     assert got == {i: 0 for i in range(n)}
-    assert stats["rounds"] <= 4 * 8 + 2, stats
+    assert stats["converged"] and stats["rounds"] <= 4 * 8 + 2, stats
 
     perm = list(range(n))
     random.Random(5).shuffle(perm)
@@ -501,24 +428,38 @@ def test_hashmin_logarithmic_on_chain(spark):
                                     for i in range(n - 1)],
                                    "doc_a BIGINT, doc_b BIGINT")
     got2 = {r.doc_id: r.cluster_id
-            for r in connected_components_hashmin(pairs2,
-                                                  max_iter=40).collect()}
+            for r in connected_components(pairs2, max_iter=40).collect()}
     assert got2 == {p: 0 for p in perm}
+
+
+def test_connected_components_cap_out_raises(spark):
+    """Running out of max_iter before the fixpoint must raise, never
+    return the partial labels of an unfinished 256-node path."""
+    from parquetaivectorsearch_spark.operators.components import (
+        connected_components)
+
+    n = 256
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
+                                  "doc_a BIGINT, doc_b BIGINT")
+    stats = {}
+    with pytest.raises(ValueError, match="no fixpoint within max_iter=4"):
+        connected_components(pairs, max_iter=4, stats=stats)
+    assert stats == {"rounds": 4, "converged": False}
 
 
 def test_hashmin_empty_and_self_loop(spark):
     from parquetaivectorsearch_spark.operators.components import (
-        connected_components_hashmin)
+        connected_components)
 
     empty = spark.createDataFrame([], "doc_a BIGINT, doc_b BIGINT")
-    out = connected_components_hashmin(empty)
+    out = connected_components(empty)
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == ["doc_id", "cluster_id"]
     # a self-pair keeps its node in the output as its own cluster
     selfp = spark.createDataFrame([(7, 7), (1, 2)],
                                   "doc_a BIGINT, doc_b BIGINT")
     got = {r.doc_id: r.cluster_id
-           for r in connected_components_hashmin(selfp).collect()}
+           for r in connected_components(selfp).collect()}
     assert got == {7: 7, 1: 1, 2: 1}
 
 

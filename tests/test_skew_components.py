@@ -1,6 +1,6 @@
 """Skew/bucketing/connected-components semantics beyond oracle parity:
-salted join ≡ plain join, bucketed join plans no Exchange, min-label
-propagation finds the right clusters."""
+salted join ≡ plain join, bucketed join plans no Exchange, hash-to-min
+connected components find the right clusters."""
 
 from __future__ import annotations
 

@@ -5,10 +5,11 @@ per-round shape claims were evidenced by code, not dumps).
 
 Each capture rebuilds ONE round of the operator on the real sf0.1 input
 exactly as the operator does, but WITHOUT the round's localCheckpoint
-call, and writes `.explain("formatted")` to plans/r15/round_<name>.txt —
-the judge can count the Exchanges per round directly.
+call, and writes `.explain("formatted")` to plans/<round>/round_<name>.txt
+so the Exchanges per round can be counted directly.
 
-Usage: python tools/capture_round_plans_r15.py
+Usage: python tools/capture_round_plans.py <round>
+    round — round label, e.g. r16: picks the output dir plans/<round>/
 """
 
 from __future__ import annotations
@@ -31,15 +32,18 @@ def main() -> None:
     from parquetaivectorsearch_spark.session import get_spark
     from parquetaivectorsearch_spark.sources import load_table
 
-    spark = get_spark("plan-rounds-r15",
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    round_tag = sys.argv[1]
+    spark = get_spark(f"plan-rounds-{round_tag}",
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
-    out = Path(_REPO) / "plans" / "r15"
+    out = Path(_REPO) / "plans" / round_tag
     out.mkdir(parents=True, exist_ok=True)
 
     # ---- hash-to-min CC: one round over the materialized H state -------
-    # (components.connected_components_hashmin inner loop, verbatim minus
-    # the checkpoint)
+    # (components.connected_components inner loop, verbatim minus the
+    # checkpoint)
     emb = load_table(spark, SF, "embeddings")
     from parquetaivectorsearch_spark.operators import ann as ANN
 
@@ -64,7 +68,7 @@ def main() -> None:
            .repartition("node").dropDuplicates(["node", "member"]))
     (out / "round_cc_hashmin.txt").write_text(
         "ONE hash-to-min round over the checkpointed H state "
-        "(connected_components_hashmin inner loop, checkpoint elided).\n"
+        "(connected_components inner loop, checkpoint elided).\n"
         "Shape: one min aggregate (its small Exchange feeds a broadcast\n"
         "build), one broadcast send-join over the H scan, both emissions\n"
         "from ONE Generate (explode), then the round's single data\n"
@@ -73,23 +77,6 @@ def main() -> None:
         "explode physically duplicated the join+agg subtree per branch\n"
         "(r15 fix).\n\n"
         + formatted_plan(rnd))
-
-    # ---- min-label CC round (the r14 shape, kept for dedup_clusters) ---
-    labels = (H.select("node").distinct()
-              .withColumn("label", F.col("node")).localCheckpoint(eager=True))
-    edges = (sym.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-             .localCheckpoint(eager=True))
-    nbr_min = (edges.join(labels.withColumnRenamed("node", "src"), "src")
-               .groupBy(F.col("dst").alias("node"))
-               .agg(F.min("label").alias("nbr_min")))
-    rnd2 = (labels.join(nbr_min, "node", "left")
-            .select("node", F.least(F.col("label"),
-                                    F.coalesce("nbr_min", F.col("label")))
-                    .alias("label")))
-    (out / "round_cc_minlabel.txt").write_text(
-        "ONE min-label round over checkpointed labels/edges "
-        "(connected_components inner loop, checkpoint elided), for\n"
-        "comparison with the hash-to-min round.\n\n" + formatted_plan(rnd2))
 
     # ---- suffix-array re-rank round (radix-4 prefix doubling) ----------
     from parquetaivectorsearch_spark.queries_curation import _shard_chars
@@ -125,10 +112,11 @@ def main() -> None:
         "window. No Python node anywhere.\n\n" + formatted_plan(loc))
 
     # ---- pagerank contribution round ------------------------------------
-    from parquetaivectorsearch_spark.operators.components import pagerank  # noqa: F401
+    edges = (sym.select(F.col("u").alias("src"), F.col("v").alias("dst"))
+             .localCheckpoint(eager=True))
     deg = edges.groupBy("src").agg(F.count("*").alias("odeg"))
     ew = edges.join(deg, "src").localCheckpoint(eager=True)
-    nn = labels.count()
+    nn = deg.count()
     ranks = (deg.select(F.col("src").alias("node"))
              .withColumn("rank", F.lit(1.0 / nn)).localCheckpoint(eager=True))
     contribs = (ew.join(ranks.withColumnRenamed("node", "src"), "src")

@@ -46,7 +46,7 @@ NOTES = {
     'dbscan_blocked':
         'planted-clone agreement + under-merge containment vs exact',
     'dbscan_embeddings':
-        'recursive-CTE closure; roles + min-label canon',
+        'recursive-CTE closure; roles + min-id cluster labels',
     'dedup_audio':
         'df_cap=64 + offset-coherence verify; true-dup recall 1.0 at every measured cap',
     'dedup_minhash_incremental':
@@ -54,7 +54,7 @@ NOTES = {
     'dedup_phash':
         'chunk df_cap + exact-clique star rescue (r11); best-match framing',
     'dedup_clusters_star':
-        'same recursive-CTE closure oracle as dedup_clusters; O(log n) large/small-star contraction (r11)',
+        'second registry name for dedup_clusters: same query, same recursive-CTE closure oracle',
     'kmeans_clusters':
         'distributed Lloyd, FULL iteration replayed as unrolled CTEs: seed/assign/update/tie-break all hash-checked (r12); auto tier = arrow since the r14 threshold retune (bench A/B 3x)',
     'kmeans_clusters_literal':

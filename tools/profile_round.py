@@ -1,16 +1,19 @@
-"""r14 optimization-round profiler: per-query min-of-N wall at ONE sf
+"""Optimization-round profiler: per-query min-of-N wall at ONE sf
 (default sf0.1, the driver's bench SF) + formatted-plan capture.
 
 Unlike bench.py (the driver-contract artifact, 3 full passes + phases)
 this is the builder's measurement loop from the optimization guide §1:
 warm pass, then min-of-REPS per query with the noop sink, plus
-`.explain("formatted")` written to plans/r14/<query>_<tag>.txt so plan
-claims in OPTIMIZATION_r14.md are checkable without running Spark.
+`.explain("formatted")` written to plans/<round>/<query>_<tag>.txt so
+plan claims in OPTIMIZATION_<round>.md are checkable without running Spark.
 
 Usage:
-    python tools/profile_r14.py <tag> [out.json] [query ...]
+    python tools/profile_round.py <round> <tag> [out.json] [query ...]
+        round    — round label, e.g. r16: picks plans/<round>/ and the
+                   default artifact name
         tag      — suffix for the plan files (before/after/...)
-        out.json — per-query timings artifact (default PROFILE_r14_<tag>.json)
+        out.json — per-query timings artifact
+                   (default PROFILE_<round>_<tag>.json)
         query    — optional subset of HEADLINE names (default: all)
 Env: PROFILE_SF_DIR (default /root/testdata/sf0.1), PROFILE_REPS (3),
      PROFILE_PLANS=0 to skip plan capture.
@@ -39,14 +42,16 @@ def main() -> None:
     from parquetaivectorsearch_spark.plans.inspect import formatted_plan
     from parquetaivectorsearch_spark.session import get_spark
 
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else \
-        f"{_REPO}/PROFILE_r14_{tag}.json"
-    names = sys.argv[3:] or list(HEADLINE)
-    plans_dir = Path(_REPO) / "plans" / "r14"
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    round_tag, tag = sys.argv[1], sys.argv[2]
+    out_path = sys.argv[3] if len(sys.argv) > 3 else \
+        f"{_REPO}/PROFILE_{round_tag}_{tag}.json"
+    names = sys.argv[4:] or list(HEADLINE)
+    plans_dir = Path(_REPO) / "plans" / round_tag
     plans_dir.mkdir(parents=True, exist_ok=True)
 
-    spark = get_spark("pavs-profile-r14",
+    spark = get_spark(f"pavs-profile-{round_tag}",
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     qs = E.queries()
