@@ -10,8 +10,9 @@ and streaming window aggregation.
 Design principles (SURVEY.md §7):
 - DataFrame/SQL first: declare logical plans, let Catalyst/Tungsten pick
   physical strategies (pushdown, pruning, broadcast, AQE).
-- Python only on the slow path, and then Arrow-batched (pandas UDF /
-  mapInPandas), never row-at-a-time.
+- Python only on the slow path, and then Arrow-batched, never
+  row-at-a-time. The vector kernels are Arrow UDFs / mapInArrow /
+  applyInArrow over numpy matrices from ``functions/vector.arrow_matrix``.
 - No ``collect()`` inside any operator path; scalar query parameters travel
   as broadcast single-row DataFrames or literals.
 - Explicit ids everywhere (``vec_id``/``doc_id``): never rely on row order

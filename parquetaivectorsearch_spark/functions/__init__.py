@@ -3,8 +3,10 @@ from parquetaivectorsearch_spark.functions.vector import (
     dot,
     dot_product_distance,
     l2_norm,
+    arrow_list,
+    arrow_matrix,
     normalize,
-    vec_dot_pandas,
+    vec_dot_arrow,
 )
 from parquetaivectorsearch_spark.functions.text import (
     approx_token_count,
@@ -22,7 +24,9 @@ __all__ = [
     "normalize",
     "cosine_similarity",
     "dot_product_distance",
-    "vec_dot_pandas",
+    "vec_dot_arrow",
+    "arrow_matrix",
+    "arrow_list",
     "approx_token_count",
     "bpe_ish_token_count_udf",
     "char_ngrams",

@@ -80,7 +80,12 @@ def char_ngrams(text: ColumnOrName, n: int = 3) -> Column:
 def char_ngram_codes(text: ColumnOrName, n: int = 3) -> Column:
     """Distinct character n-grams ENCODED as code-point-packed bigints:
     code = ((cp₁·2²¹ + cp₂)·2²¹ + …) — INJECTIVE (every Unicode code
-    point < 2²¹; n ≤ 3 keeps 21·n ≤ 63 bits), so |A∩B|, |A| and |B|
+    point < 2²¹; n ≤ 3 keeps 21·n ≤ 63 bits). Injectivity rests on
+    ``F.ascii`` returning the FULL Unicode code point of the character
+    (Spark ≥ 3.x semantics, pinned by the fixture tests on pyspark
+    4.1.2); an engine whose ascii() returns the first UTF-8 byte would
+    collide distinct grams and silently shift every jaccard built on
+    these codes. Given that, |A∩B|, |A| and |B|
     over the coded arrays equal those over ``char_ngrams`` string arrays
     EXACTLY — no hashing, no collisions, the jaccard division sees the
     same integers bit-for-bit. Purpose (r15, guide §2.3 "narrower

@@ -5,8 +5,12 @@ The reference delegates its distance kernel to a SIMD dot product
 Program.cs:256; System.Numerics.Tensors dep, csproj:15). Here the canonical
 path is pure Catalyst higher-order functions — ``zip_with`` + ``aggregate``
 stay inside whole-stage codegen on the JVM, so the "SIMD" is Tungsten — and
-the bulk path (KNN join over many queries) is a numpy pandas UDF where BLAS
+the bulk path (KNN join over many queries) is a numpy Arrow UDF where BLAS
 does a matrix-matrix multiply per Arrow batch.
+
+``arrow_matrix`` / ``arrow_list`` are the one conversion between an Arrow
+list column and an ``(n, d)`` numpy matrix, used by every vector kernel
+(mapInArrow / applyInArrow / arrow_udf bodies, driver ``toArrow()`` pulls).
 
 All folds accumulate **sequentially in double** (left fold over array
 elements) so results are bit-reproducible and match a DuckDB oracle doing
@@ -18,12 +22,14 @@ no VectorUDT in the public surface (SURVEY.md §7 hard parts).
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 ColumnOrName = Column | str
 
@@ -132,24 +138,54 @@ def hamming_distance(a: ColumnOrName, b: ColumnOrName):
     )
 
 
-@pandas_udf(T.DoubleType())
-def vec_dot_pandas(a: pd.Series, b: pd.Series) -> pd.Series:
+def arrow_matrix(arr: pa.Array | pa.ChunkedArray, dtype=None) -> np.ndarray:
+    """Arrow ``list<float|double|int>`` (chunked or sliced) → ``(n, d)``
+    ndarray via one ``flatten()`` and a reshape; ``dtype=None`` keeps the
+    value type, else one exact conversion. Raises ``ValueError`` on a
+    null or ragged row; empty input gives a ``(0, 0)`` matrix."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    n = len(arr)
+    if arr.null_count:
+        raise ValueError("arrow_matrix: null vector row")
+    if n == 0:
+        return np.empty((0, 0), dtype=dtype)
+    lens = pc.min_max(pc.list_value_length(arr))
+    d = lens["min"].as_py()
+    if lens["max"].as_py() != d:
+        raise ValueError("arrow_matrix: ragged vector rows")
+    flat = arr.flatten().to_numpy(zero_copy_only=False).reshape(n, d)
+    return flat if dtype is None else flat.astype(dtype, copy=False)
+
+
+def arrow_list(mat: np.ndarray, type: pa.ListType) -> pa.ListArray:
+    """``(n, d)`` ndarray → ``ListArray`` of list type ``type`` (one row
+    per matrix row) from the flat values and ``d``-step offsets; values
+    are cast once to the element type."""
+    mat = np.asarray(mat)
+    n, d = mat.shape
+    values = pa.array(mat.reshape(-1).astype(type.value_type.to_pandas_dtype(),
+                                             copy=False), type.value_type)
+    offsets = pa.array(np.arange(n + 1, dtype=np.int32) * d, pa.int32())
+    return pa.ListArray.from_arrays(offsets, values, type=type)
+
+
+@arrow_udf(T.DoubleType())
+def vec_dot_arrow(a: pa.Array, b: pa.Array) -> pa.Array:
     """Arrow-batched numpy dot product — the bulk fast path.
 
-    Each batch arrives as object Series of np.ndarray; stacking gives one
-    (batch, dim) matrix so BLAS does the whole batch in one einsum — the
-    Spark analog of the reference's SIMD kernel, amortized per Arrow batch
-    instead of per call (cf. hoisting comment Program.cs:39-40).
+    Each batch arrives as two Arrow list arrays; ``arrow_matrix`` views
+    each as one (batch, dim) matrix so BLAS does the whole batch in one
+    einsum — the Spark analog of the reference's SIMD kernel, amortized
+    per Arrow batch instead of per call (cf. hoisting comment
+    Program.cs:39-40).
 
     Note: numpy einsum reduction order differs from the sequential Catalyst
     fold in ``dot`` by O(1e-13) relative — use ``dot`` when oracle hash
     equality matters, this when throughput matters.
     """
-    import numpy as np
-
-    ma = np.stack(a.to_numpy())
-    mb = np.stack(b.to_numpy())
-    return pd.Series(np.einsum("ij,ij->i", ma, mb, dtype=np.float64))
+    return pa.array(np.einsum("ij,ij->i", arrow_matrix(a), arrow_matrix(b),
+                              dtype=np.float64), pa.float64())
 
 
 def maxsim_score(doc_col: ColumnOrName, query_col: ColumnOrName,

@@ -10,7 +10,7 @@ chasing structure that does not distribute. The Spark-native equivalent of
   trains on ≤ 256·nlist points); the sample cap keeps the driver step O(1)
   in corpus size — the only non-distributed step, and it is bounded.
 - **assign**: every vector gets a `list_id` = nearest centroid, via an
-  Arrow-batched pandas UDF doing one matmul per batch (the Spark analog of
+  Arrow UDF doing one matmul per batch (the Spark analog of
   the reference's SIMD kernel, cf. Program.cs:256 / csproj:15).
 - **persist** (the analog of SerializeGraph, Program.cs:231-244): the
   assigned table written `partitionBy("list_id")` — the inverted lists ARE
@@ -47,14 +47,16 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from parquetaivectorsearch_spark.operators.knn import _tie_safe_cut
+from parquetaivectorsearch_spark.functions.vector import (
+    arrow_list, arrow_matrix, vec_dot_arrow)
+from parquetaivectorsearch_spark.operators.knn import per_query_topk, query_batch
 
 METRICS = ("ip", "cosine", "l2")
 
@@ -119,9 +121,9 @@ def train_centroids(corpus: DataFrame, nlist: int, vec_col: str = "embedding",
     frac = min(1.0, (sample_cap * 1.05) / max(n, 1))
     sample = (
         corpus.sample(fraction=frac, seed=seed).limit(sample_cap)
-        .select(vec_col).toPandas()[vec_col]
+        .select(vec_col).toArrow().column(vec_col)
     )
-    x = _pre_corpus(np.stack(sample.to_numpy()).astype(np.float32), metric, max_norm)
+    x = _pre_corpus(arrow_matrix(sample, np.float32), metric, max_norm)
     if len(x) < nlist:
         raise ValueError(f"sample of {len(x)} rows cannot train {nlist} centroids")
     rng = np.random.RandomState(seed)
@@ -202,13 +204,13 @@ def train_centroids_distributed(corpus: DataFrame, nlist: int,
         # ~dim× at the reference's width — the wide-tier lesson)
         def maxn(it):
             m = 0.0
-            for pdf in it:
-                if len(pdf):
-                    X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+            for batch in it:
+                if batch.num_rows:
+                    X = arrow_matrix(batch.column("v"), np.float64)
                     m = max(m, float(np.sqrt((X * X).sum(axis=1).max())))
-            yield pd.DataFrame({"m": [m]})
+            yield pa.RecordBatch.from_pydict({"m": pa.array([m], pa.float64())})
 
-        max_norm = float(raw.mapInPandas(maxn, "m double")
+        max_norm = float(raw.mapInArrow(maxn, "m double")
                          .agg(F.max("m")).first()[0])
     mn = float(max_norm or 0.0)
 
@@ -219,10 +221,10 @@ def train_centroids_distributed(corpus: DataFrame, nlist: int,
     met = metric
 
     def prep_part(it):
-        for pdf in it:
-            if not len(pdf):
+        for batch in it:
+            if not batch.num_rows:
                 continue
-            X = np.stack(pdf["v"].to_numpy()).astype(np.float32, copy=False)
+            X = arrow_matrix(batch.column("v"), np.float32)
             if met == "ip":
                 sq = (X.astype(np.float64) ** 2).sum(axis=1)
                 aug = np.sqrt(np.maximum(mn * mn - sq, 0.0))
@@ -230,9 +232,12 @@ def train_centroids_distributed(corpus: DataFrame, nlist: int,
             elif met == "cosine":
                 n = np.linalg.norm(X, axis=1, keepdims=True)
                 X = X / np.maximum(n, 1e-30)
-            yield pd.DataFrame({"id": pdf["id"].to_numpy(), "v": list(X)})
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("id").cast(pa.int64()),
+                 arrow_list(X, pa.list_(pa.float32()))],
+                names=["id", "v"])
 
-    prep = raw.mapInPandas(prep_part, "id bigint, v array<float>") \
+    prep = raw.mapInArrow(prep_part, "id bigint, v array<float>") \
         .localCheckpoint(eager=False)
 
     seeds = kmeans_parallel_seed(prep, k=nlist, seed_rounds=seed_rounds,
@@ -256,10 +261,10 @@ def assign_lists(corpus: DataFrame, centroids: np.ndarray, metric: str = "ip",
     matmul per Arrow batch."""
     c = centroids.astype(np.float32)
 
-    @F.pandas_udf(T.IntegerType())
-    def nearest(vecs: pd.Series) -> pd.Series:
-        x = _pre_corpus(np.stack(vecs.to_numpy()).astype(np.float32), metric, max_norm)
-        return pd.Series(_nearest(x, c).astype(np.int32))
+    @F.arrow_udf(T.IntegerType())
+    def nearest(vecs: pa.Array) -> pa.Array:
+        x = _pre_corpus(arrow_matrix(vecs, np.float32), metric, max_norm)
+        return pa.array(_nearest(x, c).astype(np.int32), pa.int32())
 
     return corpus.withColumn("list_id", nearest(F.col(vec_col)))
 
@@ -317,30 +322,37 @@ class IVFIndex:
 
     def save(self, spark: SparkSession, path: str) -> None:
         write_ivf(self.lists, f"{path}/lists")
-        # pandas → Arrow path: createDataFrame from a Python list would go
-        # through the pickled-RDD path (~10× slower end-to-end for this
-        # tiny metadata write).
-        pdf = pd.DataFrame({
-            "list_id": np.arange(len(self.centroids), dtype=np.int32),
-            "centroid": [[float(v) for v in c] for c in self.centroids],
-            "metric": self.metric,
-            "max_norm": float(self.max_norm),
-        })
-        spark.createDataFrame(
-            pdf, "list_id INT, centroid ARRAY<FLOAT>, metric STRING, max_norm DOUBLE"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+        write_centroids(spark, path, self.centroids, self.metric,
+                        self.max_norm)
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "IVFIndex":
         """DeserializeGraph analog (Program.cs:246-263) — but the lists stay
         on DFS; only the centroid matrix (nlist×dim) is materialized."""
-        pdf = spark.read.parquet(f"{path}/centroids").orderBy("list_id").toPandas()
+        t = spark.read.parquet(f"{path}/centroids").orderBy("list_id").toArrow()
         return cls(
             lists=spark.read.parquet(f"{path}/lists"),
-            centroids=np.stack(pdf["centroid"].to_numpy()).astype(np.float32),
-            metric=str(pdf["metric"].iloc[0]),
-            max_norm=float(pdf["max_norm"].iloc[0]),
+            centroids=arrow_matrix(t.column("centroid"), np.float32),
+            metric=t.column("metric")[0].as_py(),
+            max_norm=float(t.column("max_norm")[0].as_py()),
         )
+
+
+def write_centroids(spark: SparkSession, path: str, centroids: np.ndarray,
+                    metric: str, max_norm: float) -> None:
+    """The (tiny) centroid artifact at ``path/centroids``, written from an
+    Arrow table (a Python-list createDataFrame takes the ~10× slower
+    pickled-RDD path)."""
+    n = len(centroids)
+    t = pa.table({
+        "list_id": pa.array(np.arange(n, dtype=np.int32), pa.int32()),
+        "centroid": arrow_list(centroids, pa.list_(pa.float32())),
+        "metric": pa.array([metric] * n, pa.string()),
+        "max_norm": pa.array([float(max_norm)] * n, pa.float64()),
+    })
+    spark.createDataFrame(
+        t, "list_id INT, centroid ARRAY<FLOAT>, metric STRING, max_norm DOUBLE"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
 
 
 # ---------------------------------------------------------------------------
@@ -354,13 +366,25 @@ def probe_lists(queries: DataFrame, index: IVFIndex, nprobe: int,
     metric = index.metric
     npb = min(nprobe, len(c))
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def probes(vecs: pd.Series) -> pd.Series:
-        q = _pre_query(np.stack(vecs.to_numpy()).astype(np.float32), metric)
+    @F.arrow_udf(T.ArrayType(T.IntegerType()))
+    def probes(vecs: pa.Array) -> pa.Array:
+        q = _pre_query(arrow_matrix(vecs, np.float32), metric)
         top = _nearest(q, c, n=npb).reshape(len(q), npb)
-        return pd.Series(list(top.astype(np.int32)))
+        return arrow_list(top.astype(np.int32), pa.list_(pa.int32()))
 
     return queries.withColumn("list_id", F.explode(probes(F.col(vec_col))))
+
+
+def probe_mask(index: IVFIndex, q_mat: np.ndarray, nprobe: int
+               ) -> tuple[np.ndarray, np.ndarray]:
+    """probe_lists' arithmetic on a driver-side query batch: (sorted
+    probed-list union int64[u], mask[u, nq] = query j probes union[i])."""
+    cents = index.centroids.astype(np.float32)
+    npb = min(nprobe, len(cents))
+    probes = _nearest(_pre_query(q_mat.astype(np.float32), index.metric),
+                      cents, n=npb).reshape(len(q_mat), npb)
+    union = np.unique(probes).astype(np.int64)
+    return union, (union[:, None, None] == probes[None, :, :]).any(axis=2)
 
 
 def ivf_search(index: IVFIndex, queries: DataFrame, k: int = 20,
@@ -381,20 +405,22 @@ def ivf_search(index: IVFIndex, queries: DataFrame, k: int = 20,
     the scan reads nprobe list directories and pushes the predicate into
     them, rather than post-filtering an oversampled top-k' result.
     """
-    from parquetaivectorsearch_spark.functions.vector import vec_dot_pandas
-
-    lists = index.lists if where is None else index.lists.filter(where)
-    probed = probe_lists(queries, index, nprobe)
-    scored = (
-        lists.join(F.broadcast(probed), "list_id")
-        .select(
-            "query_id", F.col(id_col),
-            (F.lit(1.0) - vec_dot_pandas(F.col(vec_col), F.col("query_vec"))
-             ).alias("distance"),
-        )
-    )
+    scored = _probed_distances(index, queries, nprobe, id_col, vec_col, where)
     w = Window.partitionBy("query_id").orderBy("distance", id_col)
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _probed_distances(index: IVFIndex, queries: DataFrame, nprobe: int,
+                      id_col: str, vec_col: str, where) -> DataFrame:
+    """(query_id, id, distance) for every (query, row of a probed list):
+    the broadcast probe join scored by the Arrow dot UDF."""
+    lists = index.lists if where is None else index.lists.filter(where)
+    return (lists.join(F.broadcast(probe_lists(queries, index, nprobe)),
+                       "list_id")
+            .select("query_id", F.col(id_col),
+                    (F.lit(1.0) - vec_dot_arrow(F.col(vec_col),
+                                                F.col("query_vec"))
+                     ).alias("distance")))
 
 
 def ivf_search_bulk(index: IVFIndex, queries: DataFrame, k: int = 20,
@@ -406,7 +432,7 @@ def ivf_search_bulk(index: IVFIndex, queries: DataFrame, k: int = 20,
 
     Why it exists: ivf_search's broadcast probe join duplicates every
     matched corpus row per probing query AND ships the query vector on
-    every row through the pandas-UDF scorer — at the reference's width
+    every row through the Arrow-UDF scorer — at the reference's width
     (1536 dims, 8 queries, nprobe/nlist = 1/4) that is ~8× the Arrow
     bytes of the probed data (measured 3.1s vs the brute-force bulk
     path's 0.84s at 50k×1536, BENCH_NOTES r8). Here transfer = probed
@@ -422,53 +448,25 @@ def ivf_search_bulk(index: IVFIndex, queries: DataFrame, k: int = 20,
     ``queries`` is a bounded serving batch (same contract as
     knn_join_bulk: driver-materialized). Output matches ivf_search:
     (query_id, vec_id, distance, rank); ties break on (distance, id)."""
-    import pandas as pd
-
-    q_pdf = queries.toPandas()  # bounded: the serving batch
-    q_ids = q_pdf["query_id"].to_numpy()
-    q_mat = np.stack(q_pdf["query_vec"].to_numpy()).astype(np.float32)
-    cents = index.centroids.astype(np.float32)
-    npb = min(nprobe, len(cents))
-    probes = _nearest(_pre_query(q_mat, index.metric), cents, n=npb) \
-        .reshape(len(q_ids), npb)
-    union = np.array(sorted({int(l) for row in probes for l in row}),
-                     dtype=np.int64)
-    # (n_union, nq) mask: mask[i, j] = query j probes union[i]; batch rows
-    # map into it with one vectorized searchsorted, no per-row Python
-    probe_sets = [set(int(x) for x in row) for row in probes]
-    mask_mat = np.array([[int(l) in s for s in probe_sets] for l in union])
+    q_ids, q_mat = query_batch(queries, np.float32)  # bounded: the serving batch
+    union, mask_mat = probe_mask(index, q_mat, nprobe)
 
     def score(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            ids = pdf[id_col].to_numpy()
-            lids = pdf["list_id"].to_numpy()
-            emb = np.stack(pdf[vec_col].to_numpy()).astype(np.float32)
+            lids = batch.column("list_id").to_numpy()
+            emb = arrow_matrix(batch.column(vec_col), np.float32)
             dist = 1.0 - (emb @ q_mat.T).astype(np.float64)  # (rows, nq)
             allowed = mask_mat[np.searchsorted(union, lids)]  # (rows, nq)
             dist[~allowed] = np.inf
-            out_q, out_i, out_d = [], [], []
-            for j, qid in enumerate(q_ids):
-                dj = dist[:, j]
-                finite = np.nonzero(np.isfinite(dj))[0]
-                if not len(finite):
-                    continue
-                take = min(k, len(finite))
-                # O(n) tie-inclusive cut (operators/knn._tie_safe_cut);
-                # the global (distance, id) window owns the tie-break, so
-                # emitting the extra boundary-tied rows is exact
-                cand = finite[_tie_safe_cut(dj[finite], take)]
-                out_q.extend([int(qid)] * len(cand))
-                out_i.extend(ids[cand].tolist())
-                out_d.extend(dj[cand].tolist())
-            yield pd.DataFrame(
-                {"query_id": out_q, id_col: out_i, "distance": out_d})
+            yield per_query_topk(batch.column(id_col).to_numpy(), dist,
+                                 q_ids, k, id_col=id_col)
 
     scan = index.lists.filter(
         F.col("list_id").isin([int(x) for x in union])) \
         .select("list_id", id_col, vec_col)
-    partials = scan.mapInPandas(
+    partials = scan.mapInArrow(
         score, f"query_id BIGINT, {id_col} BIGINT, distance DOUBLE")
     w = Window.partitionBy("query_id").orderBy("distance", id_col)
     return (partials.withColumn("rank", F.row_number().over(w))
@@ -486,19 +484,8 @@ def ivf_range_search(index: IVFIndex, queries: DataFrame, radius: float,
     shuffle after the scan — the missing-neighbor risk is only list pruning
     (vectors in un-probed lists), identical to top-k's. Output:
     (query_id, vec_id, distance)."""
-    from parquetaivectorsearch_spark.functions.vector import vec_dot_pandas
-
-    lists = index.lists if where is None else index.lists.filter(where)
-    probed = probe_lists(queries, index, nprobe)
-    return (
-        lists.join(F.broadcast(probed), "list_id")
-        .select(
-            "query_id", F.col(id_col),
-            (F.lit(1.0) - vec_dot_pandas(F.col(vec_col), F.col("query_vec"))
-             ).alias("distance"),
-        )
-        .filter(F.col("distance") < F.lit(radius))
-    )
+    return (_probed_distances(index, queries, nprobe, id_col, vec_col, where)
+            .filter(F.col("distance") < F.lit(radius)))
 
 
 def compact_hot_lists(spark: SparkSession, index_path: str,
@@ -542,19 +529,19 @@ def compact_hot_lists(spark: SparkSession, index_path: str,
     before/after, max list size before/after).
     """
     idx = IVFIndex.load(spark, index_path)
-    sizes = idx.lists.groupBy("list_id").count().toPandas()  # nlist rows
-    mean = float(sizes["count"].mean())
-    hot = sorted(int(i) for i in
-                 sizes[sizes["count"] > hot_ratio * mean]["list_id"])
+    sizes = idx.lists.groupBy("list_id").count().toArrow()  # nlist rows
+    lids = sizes.column("list_id").to_numpy()
+    counts = sizes.column("count").to_numpy()
+    hot = sorted(int(i) for i in lids[counts > hot_ratio * counts.mean()])
     summary = {
         "hot": hot,
         "skipped": [],
         "nlist_before": len(idx.centroids),
-        "max_size_before": int(sizes["count"].max()),
+        "max_size_before": int(counts.max()),
     }
     if not hot:
         summary.update(nlist_after=len(idx.centroids),
-                       max_size_after=int(sizes["count"].max()))
+                       max_size_after=int(counts.max()))
         return summary
 
     cents = [c for c in idx.centroids]
@@ -573,12 +560,12 @@ def compact_hot_lists(spark: SparkSession, index_path: str,
             members = (spark.read.parquet(f"{index_path}/lists")
                        .filter(F.col("list_id") == h)
                        .localCheckpoint(eager=True))
-            n_members = int(sizes.loc[sizes["list_id"] == h, "count"].iloc[0])
+            n_members = int(counts[lids == h][0])
             frac = min(1.0, (sample_cap * 1.05) / max(n_members, 1))
             sample = (members.sample(fraction=frac, seed=seed)
-                      .limit(sample_cap).select("embedding").toPandas())
-            x = _pre_corpus(np.stack(sample["embedding"].to_numpy())
-                            .astype(np.float32), metric, max_norm)
+                      .limit(sample_cap).select("embedding").toArrow())
+            x = _pre_corpus(arrow_matrix(sample.column("embedding"),
+                                         np.float32), metric, max_norm)
             # seeded 2-means (same Lloyd loop shape as train_centroids)
             sub = x[rng.choice(len(x), size=2, replace=False)].copy()
             for _ in range(10):
@@ -590,12 +577,13 @@ def compact_hot_lists(spark: SparkSession, index_path: str,
             new_id = len(cents)
             pair = np.stack(sub).astype(np.float32)
 
-            @F.pandas_udf(T.IntegerType())
-            def which(vecs: pd.Series) -> pd.Series:
-                v = _pre_corpus(np.stack(vecs.to_numpy()).astype(np.float32),
+            @F.arrow_udf(T.IntegerType())
+            def which(vecs: pa.Array) -> pa.Array:
+                v = _pre_corpus(arrow_matrix(vecs, np.float32),
                                 metric, max_norm)
                 half = _nearest(v, pair)
-                return pd.Series(np.where(half == 0, h, new_id).astype(np.int32))
+                return pa.array(np.where(half == 0, h, new_id).astype(np.int32),
+                                pa.int32())
 
             # Materialize the re-assignment BEFORE writing: dynamic
             # partition overwrite only rewrites partitions PRESENT in the
@@ -622,20 +610,12 @@ def compact_hot_lists(spark: SparkSession, index_path: str,
         spark.conf.set(mode_key, old_mode)
 
     new_cents = np.stack(cents).astype(np.float32)
-    pdf = pd.DataFrame({
-        "list_id": np.arange(len(new_cents), dtype=np.int32),
-        "centroid": [[float(v) for v in c] for c in new_cents],
-        "metric": metric,
-        "max_norm": float(max_norm),
-    })
-    spark.createDataFrame(
-        pdf, "list_id INT, centroid ARRAY<FLOAT>, metric STRING, max_norm DOUBLE"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
+    write_centroids(spark, index_path, new_cents, metric, max_norm)
 
     after = (spark.read.parquet(f"{index_path}/lists")
-             .groupBy("list_id").count().toPandas())
-    summary.update(nlist_after=len(new_cents),
-                   max_size_after=int(after["count"].max()))
+             .groupBy("list_id").agg(F.count("*").alias("n"))
+             .agg(F.max("n")).first()[0])
+    summary.update(nlist_after=len(new_cents), max_size_after=int(after))
     return summary
 
 
@@ -666,8 +646,8 @@ def knn_graph(corpus: DataFrame, k: int = 3, nlist: int | None = None,
     Each candidate lives in exactly one list, so a (src, dst) pair is
     scored at most once — no dedup pass needed before the top-k window.
     Memory honesty: CHUNK bounds only the matmul INTERMEDIATE
-    (|list| × 4096 doubles). applyInPandas cogroup materializes each
-    list's ENTIRE member set and ENTIRE prober set as pandas frames
+    (|list| × 4096 doubles). applyInArrow cogroup materializes each
+    list's ENTIRE member set and ENTIRE prober set as Arrow tables
     before chunking — a hot list's resident cost is
     O((|members| + |probers|) × dim), unlike the old streamed pair join.
     The bound on that materialization is structural, not in this
@@ -700,45 +680,32 @@ def knn_graph(corpus: DataFrame, k: int = 3, nlist: int | None = None,
     # side), never by the whole pair matrix.
     CHUNK = 4096
 
-    def score_list(members: pd.DataFrame, queries: pd.DataFrame):
-        if not len(members) or not len(queries):
-            return pd.DataFrame(
-                {"query_id": pd.Series([], dtype="int64"),
-                 "cand": pd.Series([], dtype="int64"),
-                 "distance": pd.Series([], dtype="float64")})
-        m_ids = members[id_col].to_numpy()
-        m = np.stack(members[vec_col].to_numpy()).astype(np.float64)
-        out_q, out_c, out_d = [], [], []
-        for s in range(0, len(queries), CHUNK):
-            qc = queries.iloc[s:s + CHUNK]
-            q_ids = qc["query_id"].to_numpy()
-            qm = np.stack(qc["query_vec"].to_numpy()).astype(np.float64)
+    out_schema = pa.schema([("query_id", pa.int64()), ("cand", pa.int64()),
+                            ("distance", pa.float64())])
+
+    def score_list(members: pa.Table, queries: pa.Table) -> pa.Table:
+        if not members.num_rows or not queries.num_rows:
+            return out_schema.empty_table()
+        m_ids = members.column(id_col).to_numpy()
+        m = arrow_matrix(members.column(vec_col), np.float64)
+        parts = []
+        for s in range(0, queries.num_rows, CHUNK):
+            qc = queries.slice(s, CHUNK)
+            q_ids = qc.column("query_id").to_numpy()
+            qm = arrow_matrix(qc.column("query_vec"), np.float64)
             dist = 1.0 - (m @ qm.T)  # (members, chunk)
-            dist[m_ids[:, None] == q_ids[None, :]] = np.inf  # self-edges
-            take = min(k, len(m_ids))
-            for j in range(len(q_ids)):
-                dj = dist[:, j]
-                # O(n) tie-inclusive cut (operators/knn._tie_safe_cut) —
-                # exact-duplicate embeddings (the dedup use case) must not
-                # flip which neighbor id survives, and the downstream
-                # (distance, cand) window owns the tie-break. inf
-                # (self-edge) keys never beat a finite boundary; when the
-                # boundary itself is inf (fewer finite rows than take) the
-                # superset is the whole batch and the finite filter keeps
-                # exactly the finite rows — semantics identical.
-                cand = _tie_safe_cut(dj, take)
-                cand = cand[np.isfinite(dj[cand])]
-                out_q.extend([int(q_ids[j])] * len(cand))
-                out_c.extend(m_ids[cand].tolist())
-                out_d.extend(dj[cand].tolist())
-        return pd.DataFrame(
-            {"query_id": out_q, "cand": out_c, "distance": out_d})
+            # self-edges masked out; exact-duplicate embeddings (the dedup
+            # use case) tie, and the (distance, cand) window owns the
+            # tie-break
+            dist[m_ids[:, None] == q_ids[None, :]] = np.inf
+            parts.append(per_query_topk(m_ids, dist, q_ids, k, "cand"))
+        return pa.Table.from_batches(parts, out_schema)
 
     partial = (
         index.lists.select("list_id", F.col(id_col), F.col(vec_col))
         .groupBy("list_id")
         .cogroup(probed.groupBy("list_id"))
-        .applyInPandas(score_list,
+        .applyInArrow(score_list,
                        "query_id BIGINT, cand BIGINT, distance DOUBLE")
     )
     w = Window.partitionBy("query_id").orderBy("distance", "cand")
@@ -844,9 +811,9 @@ def embedding_dedup(corpus: DataFrame, threshold: float = 0.95,
     assigned = IVFIndex.build(corpus, nlist, vec_col, metric="cosine", seed=seed).lists
     CHUNK = 2048
 
-    def per_list(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy()
-        x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+    def per_list(tbl: pa.Table) -> pa.Table:
+        ids = tbl.column(id_col).to_numpy()
+        x = arrow_matrix(tbl.column(vec_col), np.float64)
         norms = np.linalg.norm(x, axis=1)
         norms[norms == 0] = 1.0
         xn = x / norms[:, None]
@@ -862,12 +829,14 @@ def embedding_dedup(corpus: DataFrame, threshold: float = 0.95,
             out_a.extend(lo.tolist())
             out_b.extend(np.maximum(aa, bb).tolist())
             out_c.extend(sim[gi - s, jj].tolist())
-        return pd.DataFrame({"vec_a": out_a, "vec_b": out_b, "cosine": out_c})
+        return pa.table({"vec_a": pa.array(out_a, pa.int64()),
+                         "vec_b": pa.array(out_b, pa.int64()),
+                         "cosine": pa.array(out_c, pa.float64())})
 
     return (
         assigned.select("list_id", F.col(id_col), F.col(vec_col))
         .groupBy("list_id")
-        .applyInPandas(per_list, "vec_a BIGINT, vec_b BIGINT, cosine DOUBLE")
+        .applyInArrow(per_list, "vec_a BIGINT, vec_b BIGINT, cosine DOUBLE")
     )
 
 
@@ -905,14 +874,14 @@ def semantic_dedup_prune(corpus: DataFrame, eps: float = 0.05,
     cents = cents / cnorm[:, None]
     CHUNK = 2048
 
-    def per_list(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy()
+    def per_list(tbl: pa.Table) -> pa.Table:
+        ids = tbl.column(id_col).to_numpy()
         m = len(ids)
-        x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        x = arrow_matrix(tbl.column(vec_col), np.float64)
         norms = np.linalg.norm(x, axis=1)
         norms[norms == 0] = 1.0
         xn = x / norms[:, None]
-        list_id = int(pdf["list_id"].iloc[0])
+        list_id = tbl.column("list_id")[0].as_py()
         sim_c = xn @ cents[list_id]
 
         parent = np.arange(m)
@@ -943,16 +912,16 @@ def semantic_dedup_prune(corpus: DataFrame, eps: float = 0.05,
             if r not in seen:
                 seen.add(r)
                 keep[i] = True
-        return pd.DataFrame({
-            id_col: ids,
-            "cluster_id": np.full(m, list_id, dtype=np.int32),
-            "keep": keep,
-            "centroid_sim": np.round(sim_c, 6),
+        return pa.table({
+            id_col: pa.array(ids, pa.int64()),
+            "cluster_id": pa.array(np.full(m, list_id, dtype=np.int32)),
+            "keep": pa.array(keep),
+            "centroid_sim": pa.array(np.round(sim_c, 6), pa.float64()),
         })
 
     return (
         index.lists.select("list_id", F.col(id_col), F.col(vec_col))
         .groupBy("list_id")
-        .applyInPandas(per_list, f"{id_col} BIGINT, cluster_id INT, "
+        .applyInArrow(per_list, f"{id_col} BIGINT, cluster_id INT, "
                                  "keep BOOLEAN, centroid_sim DOUBLE")
     )

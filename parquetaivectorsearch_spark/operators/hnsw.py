@@ -14,7 +14,7 @@ from the published paper (Malkov & Yashunin, arXiv:1603.09320 — greedy
 descent from the top layer, ef-beam search on layer 0, geometric level
 assignment with mL = 1/ln(M)):
 
-- **build**: corpus → P hash partitions → `applyInPandas` builds one numpy
+- **build**: corpus → P hash partitions → `applyInArrow` builds one numpy
   HNSW per partition → graph rows `(part_id, vec_id, embedding, neighbors:
   array<array<bigint>>)`, one row per node, neighbor lists per layer.
 - **persist**: graph rows *including the vector*, parquet partitioned by
@@ -26,7 +26,7 @@ assignment with mL = 1/ln(M)):
   ``write_hnsw(topology_only=True)`` restores exact reference parity.
 - **search**: fan out every query to every partition graph (the merge the
   reference's Option 1 never wrote), per-partition beam search in
-  `applyInPandas`, global top-k via TakeOrderedAndProject. No corpus join:
+  `applyInArrow`, global top-k via TakeOrderedAndProject. No corpus join:
   vectors ride with the graph rows.
 
 Neighbor selection implements BOTH the paper's simple nearest-M (Alg. 3)
@@ -53,11 +53,14 @@ import heapq
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from parquetaivectorsearch_spark.functions.vector import arrow_list, arrow_matrix
+from parquetaivectorsearch_spark.operators.knn import query_batch
 
 __all__ = ["HNSWParams", "build_hnsw", "write_hnsw", "read_hnsw",
            "hnsw_search", "hnsw_append", "hnsw_compact"]
@@ -81,7 +84,7 @@ class HNSWParams:
 
 
 # ---------------------------------------------------------------------------
-# numpy HNSW core (one graph per partition; runs inside applyInPandas)
+# numpy HNSW core (one graph per partition; runs inside applyInArrow)
 #
 # Adjacency is a fixed-capacity int32 matrix per layer (nbr[l][node, :cnt])
 # instead of dict-of-arrays: slice access in the beam loop, O(1) back-link
@@ -380,21 +383,23 @@ def build_hnsw(corpus: DataFrame, n_partitions: int = 8,
     The vector rides WITH its node so search never joins the corpus."""
     p = params or HNSWParams()
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__vid", ignore_index=True)  # deterministic insert order
-        x = np.stack(pdf["__vec"].to_numpy()).astype(np.float32)
-        vids = pdf["__vid"].to_numpy()
+    def build(tbl: pa.Table) -> pa.Table:
+        tbl = tbl.sort_by("__vid")  # deterministic insert order
+        x = arrow_matrix(tbl.column("__vec"), np.float32)
+        vids = tbl.column("__vid").to_numpy()
         layers = _build_graph(x, p)
-        out = []
-        for i, vid in enumerate(vids):
-            per_layer = [
-                [int(vids[j]) for j in layers[lvl][i]]
-                for lvl in range(len(layers)) if i in layers[lvl]
-            ]
-            out.append((int(pdf["__part"].iloc[0]), int(vid),
-                        [float(v) for v in x[i]], per_layer))
-        return pd.DataFrame(
-            out, columns=["part_id", "vec_id", "embedding", "neighbors"])
+        neighbors = [
+            [[int(vids[j]) for j in layers[lvl][i]]
+             for lvl in range(len(layers)) if i in layers[lvl]]
+            for i in range(len(vids))
+        ]
+        return pa.table({
+            "part_id": pa.array(np.full(len(vids), tbl.column("__part")[0].as_py(),
+                                        dtype=np.int32)),
+            "vec_id": pa.array(vids, pa.int64()),
+            "embedding": arrow_list(x, pa.list_(pa.float32())),
+            "neighbors": pa.array(neighbors, pa.list_(pa.list_(pa.int64()))),
+        })
 
     prepared = corpus.select(
         # hash, not raw modulo: pmod(vec_id, P) degenerates under
@@ -412,7 +417,7 @@ def build_hnsw(corpus: DataFrame, n_partitions: int = 8,
     # serializing the one stage whose entire point is per-partition
     # parallelism (the build is CPU-bound, not byte-bound).
     return (prepared.repartition(n_partitions, "__part")
-            .groupBy("__part").applyInPandas(build, _GRAPH_SCHEMA))
+            .groupBy("__part").applyInArrow(build, _GRAPH_SCHEMA))
 
 
 def write_hnsw(graph: DataFrame, path: str, topology_only: bool = False) -> None:
@@ -477,7 +482,7 @@ def hnsw_search(graph: DataFrame, queries: DataFrame, k: int = 20,
     per query, ascending distance (re-sort parity Program.cs:219).
 
     The default graph carries its vectors, so the search plan is a single
-    partition-local applyInPandas over the graph scan — NO corpus join.
+    partition-local applyInArrow over the graph scan — NO corpus join.
     ``corpus`` is only consulted for topology-only graphs (reference-parity
     persistence), where it re-binds vectors by explicit vec_id join."""
     p = params or HNSWParams()
@@ -497,40 +502,43 @@ def hnsw_search(graph: DataFrame, queries: DataFrame, k: int = 20,
     # not assumed: limit(max+1) bounds the driver pull no matter what the
     # caller hands us, and one row over the cap raises instead of silently
     # collecting a million queries. Batch big query sets upstream.
-    qpdf = queries.limit(max_query_batch + 1).toPandas()
-    if len(qpdf) > max_query_batch:
+    q_ids, q_mat = query_batch(queries.limit(max_query_batch + 1), np.float32)
+    if len(q_ids) > max_query_batch:
         raise ValueError(
             f"hnsw_search query batch exceeds max_query_batch="
             f"{max_query_batch}; split the queries into batches (the serve "
             f"path broadcasts the batch to every partition graph)")
-    bq = spark.sparkContext.broadcast(qpdf)
+    bq = spark.sparkContext.broadcast((q_ids, q_mat))
 
-    def search(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.reset_index(drop=True)
-        vids = pdf["vec_id"].to_numpy()
+    def search(tbl: pa.Table) -> pa.Table:
+        vids = tbl.column("vec_id").to_numpy()
         pos = {int(v): i for i, v in enumerate(vids)}
-        x = np.stack(pdf["embedding"].to_numpy()).astype(np.float32)
-        n_layers = int(pdf["neighbors"].map(len).max())
+        x = arrow_matrix(tbl.column("embedding"), np.float32)
+        nbr_rows = tbl.column("neighbors").to_pylist()
+        n_layers = max(len(r) for r in nbr_rows)
         layers: list[dict[int, np.ndarray]] = [dict() for _ in range(n_layers)]
-        for i in range(len(pdf)):
-            for lvl, nbrs in enumerate(pdf["neighbors"].iloc[i]):
+        for i, row in enumerate(nbr_rows):
+            for lvl, nbrs in enumerate(row):
                 layers[lvl][i] = np.array(
                     [pos[int(v)] for v in nbrs], dtype=np.int64)
         entry0 = next(iter(layers[-1]))  # any top-layer member (paper Alg. 5)
-        matrix_layers = _layers_to_matrix(layers, len(pdf))
-        out = []
-        qp = bq.value
-        visited = np.zeros(len(pdf), dtype=np.int32)
+        matrix_layers = _layers_to_matrix(layers, len(vids))
+        out_q, out_v, out_d = [], [], []
+        qids, qmat = bq.value
+        visited = np.zeros(len(vids), dtype=np.int32)
         epoch = 0
-        for _, qrow in qp.iterrows():
-            qv = np.asarray(qrow["query_vec"], dtype=np.float32)
+        for qid, qv in zip(qids.tolist(), qmat):
             found, epoch = _graph_knn(x, matrix_layers, entry0, qv, k,
                                       p.ef_search, visited, epoch)
             for d, node in found:
-                out.append((int(qrow["query_id"]), int(vids[node]), float(d)))
-        return pd.DataFrame(out, columns=["query_id", "vec_id", "distance"])
+                out_q.append(qid)
+                out_v.append(int(vids[node]))
+                out_d.append(float(d))
+        return pa.table({"query_id": pa.array(out_q, pa.int64()),
+                         "vec_id": pa.array(out_v, pa.int64()),
+                         "distance": pa.array(out_d, pa.float64())})
 
-    partial = graph.groupBy("part_id").applyInPandas(
+    partial = graph.groupBy("part_id").applyInArrow(
         search,
         "query_id BIGINT, vec_id BIGINT, distance DOUBLE",
     )

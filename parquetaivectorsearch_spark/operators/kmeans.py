@@ -24,13 +24,13 @@ cannot compile at the reference's own regime of d=1536, k≥256):
   task, never rows. Whole-stage-codegen, zero Python. This is the tier
   the DuckDB oracle replays.
 - ``arrow`` (k·d > _LITERAL_KD_MAX): the centroid matrix rides to the
-  executors as a broadcast numpy array; ONE ``mapInPandas`` pass per
+  executors as a broadcast numpy array; ONE ``mapInArrow`` pass per
   round computes the batch argmin as a single matmul
   (‖x‖² − 2·X·Cᵀ + ‖c‖², the operators/ann.py ivf_search_bulk shape)
   and emits per-batch PARTIAL SUMS (cid, Σx, n) — manual map-side
   combine, ≤ k rows of d doubles per Arrow batch, so the shuffle is
   O(batches·k·d) regardless of corpus size. Partials merge per cid in
-  one ``applyInPandas``; the final divide + round runs Spark-side so
+  one ``applyInArrow``; the final divide + round runs Spark-side so
   BOTH tiers share the exact JVM HALF_UP rounding.
 
 In both tiers each round is ONE narrow pass over the corpus; driver
@@ -74,9 +74,12 @@ produces in SQL, so the unrolled oracle mirrors it for free.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from parquetaivectorsearch_spark.functions.vector import arrow_list, arrow_matrix
 
 # Above this k·d the literal argmin's expression tree (one zip_with fold
 # per centroid, k·d literals total) stops being the plan you want:
@@ -132,34 +135,60 @@ def _argmin_batch(X: np.ndarray, C: np.ndarray, cn: np.ndarray) -> np.ndarray:
     return d2.argmin(axis=1)
 
 
+def _partial_sums(X: np.ndarray, a: np.ndarray, cids: np.ndarray
+                  ) -> pa.RecordBatch:
+    """One batch's per-cluster partial sums (cid, psum, cnt) — ≤ k rows
+    of d doubles, the manual map-side combine of every arrow-tier Lloyd
+    pass (batch rounds and the streaming update)."""
+    uniq = np.unique(a)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(cids[uniq].astype(np.int32), pa.int32()),
+         arrow_list(np.array([X[a == j].sum(axis=0) for j in uniq]),
+                    pa.list_(pa.float64())),
+         pa.array([int((a == j).sum()) for j in uniq], pa.int64())],
+        names=["cid", "psum", "cnt"])
+
+
+def _merge_partial_sums(tbl: pa.Table) -> pa.Table:
+    """applyInArrow merge of one key's partial sums: the key columns,
+    Σ psum (as ``s``) and Σ cnt in one row. Shared by the distributed
+    Lloyd passes (this arrow tier, the PQ codebook trainer)."""
+    keys = [c for c in tbl.column_names if c not in ("psum", "cnt")]
+    s = arrow_matrix(tbl.column("psum"), np.float64).sum(axis=0)
+    return pa.table({
+        **{c: tbl.column(c).slice(0, 1) for c in keys},
+        "s": arrow_list(s[None, :], pa.list_(pa.float64())),
+        "cnt": pa.array([int(tbl.column("cnt").to_numpy().sum())], pa.int64()),
+    })
+
+
 def _arrow_assign(e: DataFrame, cents: list[tuple[int, list[float]]]
                   ) -> DataFrame:
-    """(id, cid) via the broadcast-matmul tier — one mapInPandas pass,
+    """(id, cid) via the broadcast-matmul tier — one mapInArrow pass,
     output schema identical to the literal tier's select."""
-    import pandas as pd
-
     sc = e.sparkSession.sparkContext
     bc = sc.broadcast(_cent_arrays(cents))
 
     def part(it):
         cids, C, cn = bc.value
-        for pdf in it:
-            if not len(pdf):
+        for batch in it:
+            if not batch.num_rows:
                 continue
-            X = np.stack(pdf["v"].to_numpy()).astype(np.float64,
-                                                     copy=False)
-            a = _argmin_batch(X, C, cn)
-            yield pd.DataFrame({"id": pdf["id"].to_numpy(),
-                                "cid": cids[a].astype(np.int32)})
+            a = _argmin_batch(arrow_matrix(batch.column("v"), np.float64),
+                              C, cn)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("id").cast(pa.int64()),
+                 pa.array(cids[a].astype(np.int32))],
+                names=["id", "cid"])
 
-    return e.mapInPandas(part, "id bigint, cid int")
+    return e.mapInArrow(part, "id bigint, cid int")
 
 
 def _arrow_round(e: DataFrame, cents: list[tuple[int, list[float]]]
                  ) -> list[tuple[int, list[float]]]:
     """One Lloyd round on the arrow tier: batch argmin + per-batch
     partial sums (≤ k rows of d doubles per Arrow batch — the manual
-    map-side combine), merged per cid in applyInPandas, divide+round
+    map-side combine), merged per cid in applyInArrow, divide+round
     Spark-side (same HALF_UP as the literal tier's F.round). Returns
     the new sorted (cid, coords) list directly.
 
@@ -169,37 +198,20 @@ def _arrow_round(e: DataFrame, cents: list[tuple[int, list[float]]]
     projection and another ~4.5s in O(d)-per-access Row name lookups on
     the driver, versus <0.1s for the array form — measured r13, same
     values bit-for-bit (HALF_UP either way)."""
-    import pandas as pd
-
     sc = e.sparkSession.sparkContext
     bc = sc.broadcast(_cent_arrays(cents))
 
     def part(it):
         cids, C, cn = bc.value
-        for pdf in it:
-            if not len(pdf):
+        for batch in it:
+            if not batch.num_rows:
                 continue
-            X = np.stack(pdf["v"].to_numpy()).astype(np.float64,
-                                                     copy=False)
-            a = _argmin_batch(X, C, cn)
-            uniq = np.unique(a)
-            yield pd.DataFrame({
-                "cid": [int(cids[j]) for j in uniq],
-                "psum": [X[a == j].sum(axis=0).tolist() for j in uniq],
-                "cnt": [int((a == j).sum()) for j in uniq],
-            })
+            X = arrow_matrix(batch.column("v"), np.float64)
+            yield _partial_sums(X, _argmin_batch(X, C, cn), cids)
 
-    partials = e.mapInPandas(part, "cid int, psum array<double>, cnt bigint")
-
-    def merge(key, pdf):
-        s = np.array([np.asarray(p, dtype=np.float64)
-                      for p in pdf["psum"]]).sum(axis=0)
-        return pd.DataFrame({"cid": [int(key[0])],
-                             "s": [s.tolist()],
-                             "cnt": [int(pdf["cnt"].sum())]})
-
-    totals = partials.groupBy("cid").applyInPandas(
-        merge, "cid int, s array<double>, cnt bigint")
+    partials = e.mapInArrow(part, "cid int, psum array<double>, cnt bigint")
+    totals = partials.groupBy("cid").applyInArrow(
+        _merge_partial_sums, "cid int, s array<double>, cnt bigint")
     rows = totals.select(
         "cid", F.transform("s", lambda x: F.round(x / F.col("cnt"), 9))
         .alias("v")).collect()
@@ -435,10 +447,8 @@ def kmeans_parallel_seed(corpus: DataFrame, k: int, l: int | None = None,
     cand = [[float(x) for x in c0["v"]]]
 
     sc = e.sparkSession.sparkContext
-    import pandas as pd
 
-    def _batch_d2(pdf, Cm, cnm):
-        X = np.stack(pdf["v"].to_numpy()).astype(np.float64, copy=False)
+    def _batch_d2(X, Cm, cnm):
         xn = (X * X).sum(axis=1)
         d2 = (xn[:, None] - 2.0 * (X @ Cm.T) + cnm[None, :]).min(axis=1)
         return np.maximum(d2, 0.0)
@@ -467,6 +477,7 @@ def kmeans_parallel_seed(corpus: DataFrame, k: int, l: int | None = None,
     n_parts = e.rdd.getNumPartitions()
     out_schema = ("kind int, r double, id bigint, u double, d2 double, "
                   "v array<double>, p double")
+    out_names = ["kind", "r", "id", "u", "d2", "v", "p"]
     for _ in range(seed_rounds):
         C = np.array(cand, dtype=np.float64)
         cn = (C * C).sum(axis=1)
@@ -481,13 +492,16 @@ def kmeans_parallel_seed(corpus: DataFrame, k: int, l: int | None = None,
             t_id = np.empty(0, np.int64)
             t_u = np.empty(0)
             t_d2 = np.empty(0)
-            t_v = np.empty(0, object)
-            for pdf in it:
-                if not len(pdf):
+            t_v = None
+            for batch in it:
+                if not batch.num_rows:
                     continue
-                d2 = _batch_d2(pdf, Cm, cnm)
+                # float64 here also widens a float32 checkpoint for the
+                # emitted array<double> column
+                X = arrow_matrix(batch.column("v"), np.float64)
+                d2 = _batch_d2(X, Cm, cnm)
                 phi_acc += float(d2.sum())
-                ids = pdf["id"].to_numpy(np.int64)
+                ids = batch.column("id").to_numpy().astype(np.int64)
                 uu = (((ids % _SEED_P) * _SEED_A + _SEED_B) % _SEED_P
                       ).astype(np.float64) / float(_SEED_P)
                 with np.errstate(divide="ignore", invalid="ignore"):
@@ -496,28 +510,25 @@ def kmeans_parallel_seed(corpus: DataFrame, k: int, l: int | None = None,
                 t_id = np.concatenate([t_id, ids])
                 t_u = np.concatenate([t_u, uu])
                 t_d2 = np.concatenate([t_d2, d2])
-                t_v = np.concatenate(
-                    [t_v, pdf["v"].to_numpy().astype(object, copy=False)])
+                t_v = X if t_v is None else np.concatenate([t_v, X])
                 keep = np.lexsort((t_id, t_rp))[:cap]  # nan/inf sort last
                 t_rp, t_id = t_rp[keep], t_id[keep]
                 t_u, t_d2, t_v = t_u[keep], t_d2[keep], t_v[keep]
             pid = TaskContext.get().partitionId()
-            out = pd.DataFrame({
-                "kind": np.concatenate([[0], np.ones(len(t_id), np.int64)]),
-                "r": np.concatenate([[-1.0], t_rp]),
-                "id": np.concatenate([[pid], t_id]),
-                "u": np.concatenate([[0.0], t_u]),
-                "d2": np.concatenate([[0.0], t_d2]),
-                # widen explicitly: the checkpoint keeps the SOURCE
-                # element type (float32 corpora ship half the bytes),
-                # but this emitted column is declared array<double>
-                "v": [None] + [np.asarray(x, dtype=np.float64).tolist()
-                               for x in t_v],
-                "p": np.concatenate([[phi_acc], np.zeros(len(t_id))]),
-            })
-            yield out
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([0], pa.int32()), pa.array([-1.0]),
+                 pa.array([pid], pa.int64()), pa.array([0.0]),
+                 pa.array([0.0]), pa.nulls(1, pa.list_(pa.float64())),
+                 pa.array([phi_acc])], names=out_names)
+            if len(t_id):  # a 0/0 ratio ships as null, as it always has
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(np.ones(len(t_id), np.int32)),
+                     pa.array(t_rp, from_pandas=True), pa.array(t_id),
+                     pa.array(t_u), pa.array(t_d2),
+                     arrow_list(t_v, pa.list_(pa.float64())),
+                     pa.array(np.zeros(len(t_id)))], names=out_names)
 
-        rows = (e.mapInPandas(fused_part, out_schema)
+        rows = (e.mapInArrow(fused_part, out_schema)
                 .orderBy("kind", "r", "id").limit(n_parts + cap).collect())
         # φ = the task partials, summed in task order (deterministic)
         phi = sum(float(r["p"]) for r in

@@ -20,11 +20,15 @@ No ``collect()`` anywhere: the query vector is a 1-row DataFrame (from a
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from parquetaivectorsearch_spark.functions.vector import dot, dot_product_distance
+from parquetaivectorsearch_spark.functions.vector import (
+    arrow_matrix, dot, dot_product_distance, vec_dot_arrow)
 
 
 def _tie_safe_cut(keys, take: int):
@@ -36,12 +40,9 @@ def _tie_safe_cut(keys, take: int):
     boundary-tied row with a smaller id before the tie-aware consumer saw
     it; including all boundary ties restores exactness, and the final
     deterministic (value, id) ordering is owned by the consumer — the
-    per-query heaps with (-d, -id) items, or the global
-    window/TakeOrdered on (distance, id) — which every caller already
-    has. Worst case (an all-tied batch) degrades to the full batch, the
-    same rows the lexsort version fed the consumer anyway."""
-    import numpy as np
-
+    global window/TakeOrdered on (distance, id) — which every caller
+    already has. Worst case (an all-tied batch) degrades to the full
+    batch, the same rows a lexsort cut would feed the consumer anyway."""
     n = len(keys)
     if take <= 0:
         return np.arange(0)  # argpartition(kth=-1) would select from the END
@@ -50,6 +51,41 @@ def _tie_safe_cut(keys, take: int):
     part = np.argpartition(keys, take - 1)
     boundary = keys[part[take - 1]]
     return np.nonzero(keys <= boundary)[0]
+
+
+def per_query_topk(ids: np.ndarray, scores: np.ndarray, q_ids: np.ndarray,
+                   k: int, id_col: str = "vec_id",
+                   score_col: str = "distance",
+                   largest: bool = False) -> pa.RecordBatch:
+    """The per-query cut-and-emit step of every bulk top-k kernel: for
+    ``scores[rows, nq]`` of one Arrow batch, each query keeps its
+    tie-inclusive ``k`` smallest (``largest``: largest) finite scores —
+    masked ±inf entries are skipped — as one RecordBatch (query_id,
+    id_col, score_col). The caller's global (score, id) window owns the
+    final order, which makes the boundary-tied superset exact."""
+    keys = -scores if largest else scores
+    rows, cols = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for j in range(len(q_ids)):
+        kj = keys[:, j]
+        finite = np.flatnonzero(np.isfinite(kj))
+        cand = finite[_tie_safe_cut(kj[finite], min(k, len(finite)))]
+        rows.append(cand)
+        cols.append(np.full(len(cand), j))
+    r, c = np.concatenate(rows), np.concatenate(cols)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(np.asarray(q_ids)[c].astype(np.int64), pa.int64()),
+         pa.array(np.asarray(ids)[r].astype(np.int64), pa.int64()),
+         pa.array(scores[r, c].astype(np.float64), pa.float64())],
+        names=["query_id", id_col, score_col])
+
+
+def query_batch(queries: DataFrame, dtype=np.float64
+                ) -> tuple[np.ndarray, np.ndarray]:
+    """Driver pull of a bounded (query_id, query_vec) serving batch:
+    (ids int64[nq], vectors[nq, d]) through ``toArrow`` + ``arrow_matrix``."""
+    t = queries.select("query_id", "query_vec").toArrow()
+    return (t.column("query_id").to_numpy().astype(np.int64),
+            arrow_matrix(t.column("query_vec"), dtype))
 
 
 def query_vector_df(corpus: DataFrame, vec_id: int,
@@ -128,60 +164,32 @@ def knn_checksum(topk: DataFrame) -> DataFrame:
 
 def knn_join_bulk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                   id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Bulk KNN join: partition-local top-k heaps via mapInPandas, then a
-    global top-k over the survivors.
+    """Bulk KNN join: per-Arrow-batch tie-inclusive top-k via mapInArrow,
+    then a global top-k over the survivors.
 
     Scale shape vs ``knn_join``: the window form shuffles |corpus|×|queries|
-    scored rows; this shuffles only P×|queries|×k survivors — the narrow
-    stage does one numpy matmul per Arrow batch (the reference's SIMD
-    kernel, Program.cs:256/csproj:15, amortized per batch) and keeps a
-    per-query top-k heap per partition. Distances are float64 einsum, which
-    differs from the sequential Catalyst fold by ~1e-13 relative → rows-only
-    vs the oracle; id-set equality vs exact knn_join is tested.
+    scored rows; this shuffles only ~batches×|queries|×k survivors — the
+    narrow stage does one numpy matmul per Arrow batch (the reference's
+    SIMD kernel, Program.cs:256/csproj:15, amortized per batch) and emits
+    each query's k best rows of the batch. Distances are float64 matmul,
+    which differs from the sequential Catalyst fold by ~1e-13 relative →
+    rows-only vs the oracle; id-set equality vs exact knn_join is tested.
 
     Output: (query_id, vec_id, distance, rank).
     """
-    import numpy as np
-    import pandas as pd
-
-    q_pdf = queries.toPandas()  # bounded: the query batch, not the corpus
-    q_ids = q_pdf["query_id"].to_numpy()
-    q_mat = np.stack(q_pdf["query_vec"].to_numpy()).astype(np.float64)
-
-    out_schema = "query_id BIGINT, vec_id BIGINT, distance DOUBLE"
+    q_ids, q_mat = query_batch(queries)  # bounded: the query batch
 
     def partial_topk(batches):
-        best: dict[int, list[tuple[float, int]]] = {int(q): [] for q in q_ids}
-        import heapq
-
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            mat = arrow_matrix(batch.column(vec_col), np.float64)
             dist = 1.0 - mat @ q_mat.T  # (batch, n_queries)
-            take = min(k, len(ids))
-            for j, qid in enumerate(q_ids):
-                dj = dist[:, j]
-                # O(n) tie-inclusive cut; the (-d, -id) heap below owns
-                # the deterministic tie-break (see _tie_safe_cut)
-                cand = _tie_safe_cut(dj, take)
-                heap = best[int(qid)]
-                for i in cand:
-                    # (-distance, -id): on equal distance the SMALLER id is
-                    # the larger heap item and survives, matching the exact
-                    # path's Window.orderBy(distance, id) tie-break
-                    item = (-dj[i], -int(ids[i]))
-                    if len(heap) < k:
-                        heapq.heappush(heap, item)
-                    elif item > heap[0]:
-                        heapq.heapreplace(heap, item)
-        rows = [
-            (qid, -negvid, -negd)
-            for qid, heap in best.items()
-            for negd, negvid in heap
-        ]
-        yield pd.DataFrame(rows, columns=["query_id", "vec_id", "distance"])
+            yield per_query_topk(batch.column(id_col).to_numpy(), dist,
+                                 q_ids, k)
 
-    survivors = corpus.select(id_col, vec_col).mapInPandas(partial_topk, out_schema)
+    survivors = corpus.select(id_col, vec_col).mapInArrow(
+        partial_topk, "query_id BIGINT, vec_id BIGINT, distance DOUBLE")
     w = Window.partitionBy("query_id").orderBy("distance", "vec_id")
     return (
         survivors.withColumn("rank", F.row_number().over(w))
@@ -214,7 +222,7 @@ def mmr_rerank(candidates: DataFrame, corpus: DataFrame, queries: DataFrame,
     redundancy, the diversification step after a KNN/hybrid retrieval.
 
     Scale shape: candidates are a per-query top-N (bounded, ~50 rows per
-    query), so the greedy O(k·N) loop runs per group inside applyInPandas
+    query), so the greedy O(k·N) loop runs per group inside applyInArrow
     with the group's own vectors only — the corpus is touched once to
     attach candidate vectors (semi-join-sized read), never iterated.
     Deterministic: float64 numpy, fixed iteration order, argmax ties break
@@ -224,22 +232,18 @@ def mmr_rerank(candidates: DataFrame, corpus: DataFrame, queries: DataFrame,
     Input ``candidates``: (query_id, vec_id, distance[, ...]).
     Output: (query_id, vec_id, mmr_rank, relevance).
     """
-    import numpy as np
-    import pandas as pd
-
-    q_pdf = queries.toPandas()
-    q_vecs = {int(r["query_id"]): np.asarray(r["query_vec"], dtype=np.float64)
-              for _, r in q_pdf.iterrows()}
+    q_ids, q_mat = query_batch(queries)
+    q_vecs = dict(zip(q_ids.tolist(), q_mat))
 
     with_vec = candidates.select("query_id", id_col, "distance").join(
         corpus.select(id_col, vec_col), id_col)
 
-    def per_query(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["distance", id_col], ignore_index=True)
-        qid = int(pdf["query_id"].iloc[0])
+    def per_query(tbl: pa.Table) -> pa.Table:
+        tbl = tbl.sort_by([("distance", "ascending"), (id_col, "ascending")])
+        qid = tbl.column("query_id")[0].as_py()
         q = q_vecs[qid]
-        x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-        ids = pdf[id_col].to_numpy()
+        x = arrow_matrix(tbl.column(vec_col), np.float64)
+        ids = tbl.column(id_col).to_numpy()
         rel = x @ q                      # relevance: dot with the query
         sim = x @ x.T                    # pairwise candidate similarity
         n = len(ids)
@@ -254,15 +258,15 @@ def mmr_rerank(candidates: DataFrame, corpus: DataFrame, queries: DataFrame,
             pick = int(score.argmax())   # stable: first max wins
             chosen.append(pick)
             free[pick] = False
-        return pd.DataFrame({
-            "query_id": qid,
-            id_col: ids[chosen],
-            "mmr_rank": np.arange(1, len(chosen) + 1, dtype=np.int32),
-            "relevance": rel[chosen],
+        return pa.table({
+            "query_id": pa.array(np.full(len(chosen), qid), pa.int64()),
+            id_col: pa.array(ids[chosen], pa.int64()),
+            "mmr_rank": pa.array(np.arange(1, len(chosen) + 1), pa.int32()),
+            "relevance": pa.array(rel[chosen], pa.float64()),
         })
 
     out_schema = f"query_id BIGINT, {id_col} BIGINT, mmr_rank INT, relevance DOUBLE"
-    return with_vec.groupBy("query_id").applyInPandas(per_query, out_schema)
+    return with_vec.groupBy("query_id").applyInArrow(per_query, out_schema)
 
 
 def knn_topk_arrow(corpus: DataFrame, query: DataFrame, k: int = 20,
@@ -285,49 +289,38 @@ def knn_topk_arrow(corpus: DataFrame, query: DataFrame, k: int = 20,
     ``query`` is a 1-ROW DataFrame: each Arrow batch reads the query
     vector from its first row (multi-query batching = ``knn_join_bulk``).
     """
-    import pyarrow as pa
+    def distance(emb, qv):
+        # float32 matvec (halves memory traffic — the batch cost is
+        # bandwidth, not flops), then one float64 upcast of the scores:
+        # ~1e-6..1e-5 rel dot error at dim 1536, acceptable because
+        # the variant is rows-only by contract and fixtures' neighbor
+        # gaps dwarf it.
+        return 1.0 - (emb @ qv.astype(emb.dtype)).astype(np.float64)
 
-    qj = corpus.join(F.broadcast(query))
+    return _one_query_topk(corpus, query, k, id_col, vec_col, distance)
 
+
+def _one_query_topk(corpus: DataFrame, query: DataFrame, k: int,
+                    id_col: str, vec_col: str, score, score_col: str = "distance",
+                    largest: bool = False) -> DataFrame:
+    """corpus ⋈ broadcast(1-row query) → per-batch ``score(emb,
+    query float64[d])`` + tie-inclusive top-k → global TakeOrdered."""
     def score_batches(batches):
-        import numpy as np
-
         for batch in batches:
-            if batch.num_rows == 0:
+            if not batch.num_rows:
                 continue
-            # Arrow list column → flat numpy view → (rows, dim) reshape:
-            # NO per-element Python conversion. (The original to_pydict()
-            # materialized every vector as a Python list — measured 6×
-            # SLOWER than the Catalyst fold at dim=1536, inverting the
-            # whole point of this path; zero-copy flatten makes the batch
-            # cost one BLAS matvec.)
-            ids = batch.column(id_col).to_numpy(zero_copy_only=False)
-            emb_col = batch.column(vec_col)
-            flat = emb_col.flatten().to_numpy(zero_copy_only=False)
-            emb = flat.reshape(batch.num_rows, -1)
-            qv = np.asarray(
-                batch.column("query_vec")[0].as_py(), dtype=np.float64)
-            qid = batch.column("query_id")[0].as_py()
-            # float32 matvec (halves memory traffic — the batch cost is
-            # bandwidth, not flops), then one float64 upcast of the scores:
-            # ~1e-6..1e-5 rel dot error at dim 1536, acceptable because
-            # the variant is rows-only by contract and fixtures' neighbor
-            # gaps dwarf it.
-            dist = 1.0 - (emb @ qv.astype(emb.dtype)).astype(np.float64)
-            take = min(k, len(dist))
-            # O(n) tie-inclusive cut: emitting the few extra boundary-tied
-            # rows is harmless — the global TakeOrdered on (distance, id)
-            # below owns the tie-break (see _tie_safe_cut)
-            top = _tie_safe_cut(dist, take)
-            yield pa.RecordBatch.from_pydict({
-                "query_id": pa.array(np.full(len(top), qid), pa.int64()),
-                id_col: pa.array(ids[top].astype(np.int64), pa.int64()),
-                "distance": pa.array(dist[top], pa.float64()),
-            })
+            qv = arrow_matrix(batch.column("query_vec").slice(0, 1),
+                              np.float64)[0]
+            s = score(arrow_matrix(batch.column(vec_col)), qv)
+            yield per_query_topk(batch.column(id_col).to_numpy(), s[:, None],
+                                 batch.column("query_id").to_numpy()[:1], k,
+                                 id_col=id_col, score_col=score_col,
+                                 largest=largest)
 
-    partials = qj.mapInArrow(
-        score_batches, f"query_id long, {id_col} long, distance double")
-    return partials.orderBy("distance", id_col).limit(k)
+    partials = corpus.join(F.broadcast(query)).mapInArrow(
+        score_batches, f"query_id long, {id_col} long, {score_col} double")
+    order = F.desc(score_col) if largest else F.col(score_col)
+    return partials.orderBy(order, id_col).limit(k)
 
 
 def int8_knn_join_bulk(quantized: DataFrame, corpus: DataFrame,
@@ -338,7 +331,7 @@ def int8_knn_join_bulk(quantized: DataFrame, corpus: DataFrame,
     4×-smaller quantized table — `quantized` = (vec_id, scale,
     qvec array<tinyint>) from functions/vector.int8_quantize — scoring
     approx distance 1 − scale·(q·qvec) with one numpy matmul per Arrow
-    batch and keeping per-partition top-`shortlist` heaps; phase 2
+    batch and keeping each query's top-`shortlist` rows; phase 2
     exact-reranks the broadcast shortlist against the full-precision
     vectors. At the reference's width (1536 dims) BOTH the scan bytes AND
     the Python-worker Arrow transfer shrink 4× vs the float corpus — the
@@ -346,57 +339,38 @@ def int8_knn_join_bulk(quantized: DataFrame, corpus: DataFrame,
     (BENCH_NOTES r7), which is what makes this tier pay there.
 
     Output: (query_id, vec_id, distance, rank) — exact distances after
-    rerank, same schema family as knn_join_bulk. Same tie-breaks."""
-    import heapq
+    rerank, same schema family as knn_join_bulk. Same tie-breaks.
 
-    import numpy as np
-    import pandas as pd
-
-    from parquetaivectorsearch_spark.functions.vector import vec_dot_pandas
-
-    q_pdf = queries.toPandas()  # bounded: the query batch
-    q_ids = q_pdf["query_id"].to_numpy()
-    q_mat = np.stack(q_pdf["query_vec"].to_numpy()).astype(np.float32)
+    The shortlist is each query's global top-``shortlist`` by (approx
+    distance, id): per-batch tie-inclusive cuts, then one window."""
+    q_ids, q_mat = query_batch(queries, np.float32)  # bounded: the query batch
 
     def partial(batches):
-        best: dict[int, list[tuple[float, int]]] = {int(q): [] for q in q_ids}
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            ids = pdf[id_col].to_numpy()
-            scale = pdf["scale"].to_numpy().astype(np.float32)
-            qv = np.stack(pdf["qvec"].to_numpy()).astype(np.float32)
-            # (batch, nq): 1 - scale_i * (qvec_i · q_j)
+            scale = batch.column("scale").to_numpy().astype(np.float32)
+            qv = arrow_matrix(batch.column("qvec"), np.float32)
+            # (batch, nq): 1 - scale_i * (qvec_i · q_j); duplicate vectors
+            # quantize identically, so the cut must be tie-inclusive
             dist = 1.0 - scale[:, None] * (qv @ q_mat.T)
-            take = min(shortlist, len(ids))
-            for j, qid in enumerate(q_ids):
-                dj = dist[:, j]
-                # O(n) tie-inclusive cut (duplicate vectors quantize
-                # identically); the heap owns the tie-break
-                cand = _tie_safe_cut(dj, take)
-                heap = best[int(qid)]
-                for i in cand:
-                    item = (-float(dj[i]), -int(ids[i]))
-                    if len(heap) < shortlist:
-                        heapq.heappush(heap, item)
-                    elif item > heap[0]:
-                        heapq.heapreplace(heap, item)
-        rows = [(qid, -negvid) for qid, heap in best.items()
-                for _negd, negvid in heap]
-        yield pd.DataFrame(rows, columns=["query_id", id_col])
+            yield per_query_topk(batch.column(id_col).to_numpy(), dist,
+                                 q_ids, shortlist, id_col=id_col)
 
-    short = quantized.select(id_col, "scale", "qvec").mapInPandas(
-        partial, f"query_id BIGINT, {id_col} BIGINT")
+    approx = quantized.select(id_col, "scale", "qvec").mapInArrow(
+        partial, f"query_id BIGINT, {id_col} BIGINT, distance DOUBLE")
+    w = Window.partitionBy("query_id").orderBy("distance", id_col)
+    short = (approx.withColumn("rank", F.row_number().over(w))
+             .filter(F.col("rank") <= shortlist).select("query_id", id_col))
     # phase 2: exact rerank — shortlist broadcast, corpus never shuffles
     exact = (
-        F.broadcast(short.distinct()).join(corpus.select(id_col, vec_col), id_col)
+        F.broadcast(short).join(corpus.select(id_col, vec_col), id_col)
         .join(F.broadcast(queries.withColumnRenamed("query_id", "qid")),
               F.col("query_id") == F.col("qid"))
         .select("query_id", id_col,
-                (F.lit(1.0) - vec_dot_pandas(F.col(vec_col), F.col("query_vec"))
+                (F.lit(1.0) - vec_dot_arrow(F.col(vec_col), F.col("query_vec"))
                  ).alias("distance"))
     )
-    w = Window.partitionBy("query_id").orderBy("distance", id_col)
     return (exact.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))
 
@@ -465,42 +439,16 @@ def maxsim_topk_arrow(corpus: DataFrame, query: DataFrame, k: int = 20,
     → rows-only by contract; id-parity with the expression form is tested
     in tests/test_knn.py. Output: (query_id, vec_id, maxsim) descending.
     """
-    import pyarrow as pa
+    def maxsim(emb, qv):
+        n, dim = emb.shape
+        if dim % n_tok:
+            raise ValueError(
+                f"embedding dim {dim} not divisible into {n_tok} tokens")
+        d = emb.astype(np.float64).reshape(n, n_tok, dim // n_tok)
+        # (rows, q_tok, d_tok) interaction grid → max over doc tokens,
+        # sum over query tokens
+        grid = np.einsum("ntd,md->nmt", d, qv.reshape(n_tok, dim // n_tok))
+        return grid.max(axis=2).sum(axis=1)
 
-    qj = corpus.join(F.broadcast(query))
-
-    def score_batches(batches):
-        import numpy as np
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(id_col).to_numpy(zero_copy_only=False)
-            flat = batch.column(vec_col).flatten().to_numpy(zero_copy_only=False)
-            emb = flat.reshape(batch.num_rows, -1)
-            dim = emb.shape[1]
-            if dim % n_tok:
-                raise ValueError(
-                    f"embedding dim {dim} not divisible into {n_tok} tokens")
-            tok_dim = dim // n_tok
-            qv = np.asarray(batch.column("query_vec")[0].as_py(),
-                            dtype=np.float64).reshape(n_tok, tok_dim)
-            qid = batch.column("query_id")[0].as_py()
-            d = emb.astype(np.float64).reshape(len(ids), n_tok, tok_dim)
-            # (rows, q_tok, d_tok) interaction grid → max over doc tokens,
-            # sum over query tokens
-            grid = np.einsum("ntd,md->nmt", d, qv)
-            score = grid.max(axis=2).sum(axis=1)
-            take = min(k, len(score))
-            # O(n) tie-inclusive cut on -score; the global TakeOrdered on
-            # (maxsim DESC, vec_id) below owns the tie-break
-            top = _tie_safe_cut(-score, take)
-            yield pa.RecordBatch.from_pydict({
-                "query_id": pa.array(np.full(len(top), qid), pa.int64()),
-                id_col: pa.array(ids[top].astype(np.int64), pa.int64()),
-                "maxsim": pa.array(score[top], pa.float64()),
-            })
-
-    partials = qj.mapInArrow(
-        score_batches, f"query_id long, {id_col} long, maxsim double")
-    return partials.orderBy(F.desc("maxsim"), id_col).limit(k)
+    return _one_query_topk(corpus, query, k, id_col, vec_col, maxsim,
+                           "maxsim", largest=True)

@@ -6,14 +6,14 @@ reference's 1536-dim regime to an index-friendly width). Spark-first
 shape:
 
 - **sufficient statistics, one distributed pass**: per-partition partial
-  (n, Σx, ΣxxT) via mapInPandas (one BLAS ``x.T @ x`` per Arrow batch),
+  (n, Σx, ΣxxT) via mapInArrow (one BLAS ``x.T @ x`` per Arrow batch),
   then a single-task combine — the classic mergeable-moments pattern, so
   corpus size only affects the first (fully parallel) stage.
 - **eigendecomposition on the driver**: the combined covariance is d×d —
   O(dim²) scalars, INDEPENDENT of corpus size (64-dim fixtures: 4 KB;
   the reference's 1536 dims: ~19 MB — still a driver-trivial eigh).
   ``max_dim`` guards against misuse on wider-than-covariance-fits data.
-- **projection is a narrow Arrow map**: one (batch × d) @ (d × k) matmul
+- **projection is a narrow Arrow UDF**: one (batch × d) @ (d × k) matmul
   per batch; components ride the UDF closure.
 
 Determinism: eigh of a symmetric matrix with distinct eigenvalues is
@@ -29,11 +29,13 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from parquetaivectorsearch_spark.functions.vector import arrow_list, arrow_matrix
 
 
 @dataclass
@@ -49,12 +51,19 @@ def fit_pca(corpus: DataFrame, k: int = 8, vec_col: str = "embedding",
     """One distributed stats pass + driver eigh. See module docstring."""
     stats_schema = "n LONG, s ARRAY<DOUBLE>, ss ARRAY<DOUBLE>"
 
+    def stats_batch(n, s, ss):
+        double_list = pa.list_(pa.float64())
+        return pa.RecordBatch.from_arrays(
+            [pa.array([n], pa.int64()), arrow_list(s[None, :], double_list),
+             arrow_list(ss.reshape(1, -1), double_list)],
+            names=["n", "s", "ss"])
+
     def partial(batches):
         n, s, ss = 0, None, None
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            x = arrow_matrix(batch.column(vec_col), np.float64)
             if x.shape[1] > max_dim:
                 raise ValueError(
                     f"fit_pca: dim {x.shape[1]} > max_dim {max_dim} — the "
@@ -64,30 +73,29 @@ def fit_pca(corpus: DataFrame, k: int = 8, vec_col: str = "embedding",
             g = x.T @ x
             ss = g if ss is None else ss + g
         if n:
-            yield pd.DataFrame({"n": [n], "s": [s], "ss": [ss.reshape(-1)]})
+            yield stats_batch(n, s, ss)
 
-    parts = corpus.select(vec_col).mapInPandas(partial, stats_schema)
+    parts = corpus.select(vec_col).mapInArrow(partial, stats_schema)
 
     def combine(batches):
         n, s, ss = 0, None, None
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                n += int(row["n"])
-                rs = np.asarray(row["s"], dtype=np.float64)
-                rss = np.asarray(row["ss"], dtype=np.float64)
-                s = rs if s is None else s + rs
-                ss = rss if ss is None else ss + rss
+        for batch in batches:
+            bs = arrow_matrix(batch.column("s"), np.float64)
+            bss = arrow_matrix(batch.column("ss"), np.float64)
+            for i, bn in enumerate(batch.column("n").to_pylist()):
+                n += bn
+                s = bs[i] if s is None else s + bs[i]
+                ss = bss[i] if ss is None else ss + bss[i]
         if n:
-            yield pd.DataFrame({"n": [n], "s": [s], "ss": [ss]})
+            yield stats_batch(n, s, ss)
 
-    one = parts.coalesce(1).mapInPandas(combine, stats_schema).collect()
-    if not one:
+    one = parts.coalesce(1).mapInArrow(combine, stats_schema).toArrow()
+    if not one.num_rows:
         raise ValueError("fit_pca: empty corpus")
-    row = one[0]
-    n = int(row["n"])
-    s = np.asarray(row["s"], dtype=np.float64)
+    n = one.column("n")[0].as_py()
+    s = arrow_matrix(one.column("s"), np.float64)[0]
     d = len(s)
-    ss = np.asarray(row["ss"], dtype=np.float64).reshape(d, d)
+    ss = arrow_matrix(one.column("ss"), np.float64)[0].reshape(d, d)
     mean = s / n
     cov = ss / n - np.outer(mean, mean)
     vals, vecs = np.linalg.eigh(cov)  # ascending
@@ -110,10 +118,10 @@ def pca_project(corpus: DataFrame, model: PCAModel,
     mean = model.mean
     ct = model.components.T  # (d, k)
 
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def proj(vecs: pd.Series) -> pd.Series:
-        x = np.stack(vecs.to_numpy()).astype(np.float64)
-        p = ((x - mean) @ ct).astype(np.float32)
-        return pd.Series(list(p))
+    @F.arrow_udf(T.ArrayType(T.FloatType()))
+    def proj(vecs: pa.Array) -> pa.Array:
+        x = arrow_matrix(vecs, np.float64)
+        return arrow_list(((x - mean) @ ct).astype(np.float32),
+                          pa.list_(pa.float32()))
 
     return corpus.withColumn(out_col, proj(F.col(vec_col)))

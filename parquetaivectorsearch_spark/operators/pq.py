@@ -14,11 +14,12 @@ asymmetric distance computation (ADC).
 Spark shape (100 TB posture):
 - codebook training is a capped driver-side sample (like the IVF coarse
   quantizer — the only driver-side math in the engine);
-- encoding is one mapInPandas pass (numpy argmin per subspace per Arrow
+- encoding is one mapInArrow pass (numpy argmin per subspace per Arrow
   batch); codes persist as a parquet table ~64× smaller than the vectors,
   the working set that makes a billion-vector scan RAM-resident;
-- ADC search scans only the codes table with partition-local top-k heaps
-  (shuffles P×|queries|×shortlist survivor rows);
+- ADC search scans only the codes table and keeps each query's
+  tie-inclusive top-shortlist per Arrow batch (shuffles
+  batches×|queries|×shortlist survivor rows);
 - the shortlist is re-ranked exactly against the raw vectors (standard
   PQ + re-rank), so final top-k quality is set by the shortlist depth,
   not the quantization error.
@@ -31,11 +32,16 @@ The reference's HNSW holds every raw vector in RAM (Program.cs:26,106-107,
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from parquetaivectorsearch_spark.functions.vector import arrow_list, arrow_matrix
+from parquetaivectorsearch_spark.operators.kmeans import (
+    _merge_partial_sums, _partial_sums)
+from parquetaivectorsearch_spark.operators.knn import per_query_topk, query_batch
 
 
 def _kmeans_books(x: np.ndarray, m: int, k: int,
@@ -69,7 +75,7 @@ def _kmeans_books(x: np.ndarray, m: int, k: int,
     return books
 
 
-def _det_sample(df: DataFrame, cols: list[str], cap: int) -> pd.DataFrame:
+def _det_sample(df: DataFrame, cols: list[str], cap: int) -> pa.Table:
     """Deterministic capped training sample: bottom-``cap`` rows by
     xxhash64 of the selected columns (TakeOrderedAndProject — one scan,
     ``cap`` rows pulled, never a global sort). A bare ``limit(cap)``
@@ -80,10 +86,27 @@ def _det_sample(df: DataFrame, cols: list[str], cap: int) -> pd.DataFrame:
     is the tiebreak-free sort key; distinct rows colliding on the 64-bit
     hash are broken by the columns themselves (arrays are orderable)."""
     h = F.xxhash64(*[F.col(c) for c in cols])
-    pdf = (df.select(*cols)
-           .orderBy(h.asc(), *[F.col(c).asc() for c in cols])
-           .limit(cap).toPandas())
-    return pdf
+    return (df.select(*cols)
+            .orderBy(h.asc(), *[F.col(c).asc() for c in cols])
+            .limit(cap).toArrow())
+
+
+def _sample_matrix(df: DataFrame, vec_col: str, cap: int) -> np.ndarray:
+    """The deterministic capped training sample as a float64 matrix."""
+    return arrow_matrix(_det_sample(df, [vec_col], cap).column(vec_col),
+                        np.float64)
+
+
+def _residual_sample(index, vec_col: str, cap: int) -> np.ndarray:
+    """Deterministic capped sample of IVFADC residuals x − c(list(x)):
+    ``index.centroids[:, :d]`` are the raw-space list means even under
+    the 'ip' metric's norm-augmented assignment geometry (k-means means
+    of the members' raw coordinates — operators/ann.py:_pre_corpus only
+    APPENDS the augmentation column, never rescales the first d)."""
+    t = _det_sample(index.lists, [vec_col, "list_id"], cap)
+    x = arrow_matrix(t.column(vec_col), np.float64)
+    rc = index.centroids.astype(np.float64)[:, :x.shape[1]]
+    return x - rc[t.column("list_id").to_numpy()]
 
 
 def train_pq(corpus: DataFrame, m: int = 8, k: int = 16,
@@ -92,9 +115,8 @@ def train_pq(corpus: DataFrame, m: int = 8, k: int = 16,
     """Train per-subspace codebooks on a capped sample; returns
     float64[m, k, d/m]. Deterministic: seeded init, fixed iteration count,
     vectorized L2 k-means per subspace."""
-    pdf = _det_sample(corpus, [vec_col], sample_cap)
-    x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    return _kmeans_books(x, m, k, iters, seed)
+    return _kmeans_books(_sample_matrix(corpus, vec_col, sample_cap),
+                         m, k, iters, seed)
 
 
 def train_pq_distributed(corpus: DataFrame, m: int = 8, k: int = 16,
@@ -114,7 +136,7 @@ def train_pq_distributed(corpus: DataFrame, m: int = 8, k: int = 16,
     the broadcast (m, k, d/m) codebook tensor and emits per-batch
     partial sums keyed (subspace, code) — ≤ m·k rows of d/m doubles per
     batch, the manual map-side combine — merged per key in
-    applyInPandas; the divide + 9dp round runs Spark-side (the
+    applyInArrow; the divide + 9dp round runs Spark-side (the
     kmeans_lloyd arrow-tier shape, operators/kmeans.py). Driver pull
     per round: m·k·(d/m) = k·d doubles, corpus-size-independent.
 
@@ -145,57 +167,44 @@ def train_pq_distributed(corpus: DataFrame, m: int = 8, k: int = 16,
         raise ValueError(f"dim {d} not divisible by m={m}")
     dsub = d // m
     e = raw.localCheckpoint(eager=False)
-    seed_rows = e.orderBy("id").limit(k).collect()
-    if len(seed_rows) < k:
+    seed_rows = e.orderBy("id").limit(k).toArrow()
+    if seed_rows.num_rows < k:
         raise ValueError(
-            f"corpus of {len(seed_rows)} rows cannot seed {k} codewords")
+            f"corpus of {seed_rows.num_rows} rows cannot seed {k} codewords")
     rc = (None if residual_centroids is None
           else residual_centroids.astype(np.float64))
-    X0 = np.stack([np.asarray(r["v"], dtype=np.float64) for r in seed_rows])
+    X0 = arrow_matrix(seed_rows.column("v"), np.float64)
     if rc is not None:
-        X0 = X0 - rc[np.array([int(r["list_id"]) for r in seed_rows])]
+        X0 = X0 - rc[seed_rows.column("list_id").to_numpy()]
     books = np.stack([X0[:, j * dsub:(j + 1) * dsub].copy()
                       for j in range(m)])  # (m, k, dsub)
 
     sc = corpus.sparkSession.sparkContext
+    code_ids = np.arange(k)
     for _ in range(rounds):
         bc = sc.broadcast(books)
 
         def part(it):
             B = bc.value
-            for pdf in it:
-                if not len(pdf):
+            for batch in it:
+                if not batch.num_rows:
                     continue
-                X = np.stack(pdf["v"].to_numpy()).astype(np.float64,
-                                                         copy=False)
+                X = arrow_matrix(batch.column("v"), np.float64)
                 if rc is not None:
-                    X = X - rc[pdf["list_id"].to_numpy()]
-                js, cs, ps, ns = [], [], [], []
+                    X = X - rc[batch.column("list_id").to_numpy()]
                 for j in range(m):
                     xj = X[:, j * dsub:(j + 1) * dsub]
                     d2 = ((xj * xj).sum(1)[:, None] - 2.0 * (xj @ B[j].T)
                           + (B[j] * B[j]).sum(1)[None, :])
                     a = d2.argmin(1)  # first-minimal-index = smallest code
-                    for c in np.unique(a):
-                        js.append(j)
-                        cs.append(int(c))
-                        ps.append(xj[a == c].sum(axis=0).tolist())
-                        ns.append(int((a == c).sum()))
-                yield pd.DataFrame(
-                    {"j": js, "cid": cs, "psum": ps, "cnt": ns})
+                    sums = _partial_sums(xj, a, code_ids)
+                    yield sums.add_column(0, "j", pa.array(
+                        np.full(sums.num_rows, j, dtype=np.int32)))
 
-        partials = e.mapInPandas(
+        partials = e.mapInArrow(
             part, "j int, cid int, psum array<double>, cnt bigint")
-
-        def merge(key, pdf):
-            s = np.array([np.asarray(p, dtype=np.float64)
-                          for p in pdf["psum"]]).sum(axis=0)
-            return pd.DataFrame({"j": [int(key[0])], "cid": [int(key[1])],
-                                 "s": [s.tolist()],
-                                 "cnt": [int(pdf["cnt"].sum())]})
-
-        totals = partials.groupBy("j", "cid").applyInPandas(
-            merge, "j int, cid int, s array<double>, cnt bigint")
+        totals = partials.groupBy("j", "cid").applyInArrow(
+            _merge_partial_sums, "j int, cid int, s array<double>, cnt bigint")
         rows = totals.select(
             "j", "cid",
             F.transform("s", lambda x: F.round(x / F.col("cnt"), 9))
@@ -248,10 +257,14 @@ def train_opq(corpus: DataFrame, m: int = 8, k: int = 16,
 
     All driver-side over the same capped sample train_pq uses; the SVD
     is d×d (64×64 here, 1536×1536 at the reference's width — trivial)."""
-    pdf = _det_sample(corpus, [vec_col], sample_cap)
-    x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    d = x.shape[1]
-    R = np.eye(d)
+    return _opq(_sample_matrix(corpus, vec_col, sample_cap),
+                m, k, iters, opq_iters, seed)
+
+
+def _opq(x: np.ndarray, m: int, k: int, iters: int, opq_iters: int,
+         seed: int) -> tuple[np.ndarray, np.ndarray]:
+    """OPQ alternation over a sample matrix (see train_opq): (R, books)."""
+    R = np.eye(x.shape[1])
     books = _kmeans_books(x, m, k, iters, seed)
     for _ in range(opq_iters):
         dec = _decode_mat(_encode_mat(x @ R, books), books)
@@ -278,20 +291,8 @@ def train_opq_residual(index, m: int = 8, k: int = 16,
     ``pq_encode(…, residual_centroids=rc, rotation=R)`` and search with
     ``ivf_pq_search(…, residual=True, rotation=R)`` — orthogonality
     preserves <q, r̂>, so the coarse offset term stays in raw space."""
-    pdf = _det_sample(index.lists, [vec_col, "list_id"], sample_cap)
-    x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    lids = pdf["list_id"].to_numpy()
-    rc = index.centroids.astype(np.float64)[:, :x.shape[1]]
-    res = x - rc[lids]
-    d = res.shape[1]
-    R = np.eye(d)
-    books = _kmeans_books(res, m, k, iters, seed)
-    for _ in range(opq_iters):
-        dec = _decode_mat(_encode_mat(res @ R, books), books)
-        u, _s, vt = np.linalg.svd(res.T @ dec)
-        R = u @ vt
-        books = _kmeans_books(res @ R, m, k, iters, seed, init=books)
-    return R, books
+    return _opq(_residual_sample(index, vec_col, sample_cap),
+                m, k, iters, opq_iters, seed)
 
 
 def train_pq_residual(index, m: int = 8, k: int = 16,
@@ -303,17 +304,9 @@ def train_pq_residual(index, m: int = 8, k: int = 16,
     the residual distribution is far tighter than the raw one, so the
     same m×k code budget spends its centroids on a smaller cell — lower
     quantization error, better shortlist quality at equal bytes (pinned
-    in tests/test_pq.py::test_residual_encoding_cuts_quantization_error).
-
-    ``index.centroids[:, :d]`` are the raw-space list means even under
-    the 'ip' metric's norm-augmented assignment geometry (k-means means
-    of the members' raw coordinates — operators/ann.py:_pre_corpus only
-    APPENDS the augmentation column, never rescales the first d)."""
-    pdf = _det_sample(index.lists, [vec_col, "list_id"], sample_cap)
-    x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    lids = pdf["list_id"].to_numpy()
-    rc = index.centroids.astype(np.float64)[:, :x.shape[1]]
-    return _kmeans_books(x - rc[lids], m, k, iters, seed)
+    in tests/test_pq.py::test_residual_encoding_cuts_quantization_error)."""
+    return _kmeans_books(_residual_sample(index, vec_col, sample_cap),
+                         m, k, iters, seed)
 
 
 def pq_encode(corpus: DataFrame, codebooks: np.ndarray,
@@ -321,7 +314,7 @@ def pq_encode(corpus: DataFrame, codebooks: np.ndarray,
               extra_cols: tuple[str, ...] = (),
               residual_centroids: np.ndarray | None = None,
               rotation: np.ndarray | None = None) -> DataFrame:
-    """Encode every vector to its m subspace codes (one mapInPandas pass).
+    """Encode every vector to its m subspace codes (one mapInArrow pass).
 
     Output: (vec_id, codes array<int>[, extra_cols…]) — the compressed
     corpus table; write it as parquet and search it instead of the raw
@@ -344,23 +337,27 @@ def pq_encode(corpus: DataFrame, codebooks: np.ndarray,
           else residual_centroids.astype(np.float64))
     rot = None if rotation is None else rotation.astype(np.float64)
 
+    extras = [f for f in corpus.schema.fields if f.name in extra_cols]
+
     def encode(batches):
-        for pdf in batches:
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            x = arrow_matrix(batch.column(vec_col), np.float64)
             if rc is not None:
-                x = x - rc[pdf["list_id"].to_numpy()]
+                x = x - rc[batch.column("list_id").to_numpy()]
             if rot is not None:
                 x = x @ rot
             codes = _encode_mat(x, books)
-            out = {id_col: pdf[id_col].to_numpy(), "codes": list(codes)}
-            for c in extra_cols:
-                out[c] = pdf[c].to_numpy()
-            yield pd.DataFrame(out)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(id_col).cast(pa.int64()),
+                 arrow_list(codes, pa.list_(pa.int32()))]
+                + [batch.column(f.name) for f in extras],
+                names=[id_col, "codes"] + [f.name for f in extras])
 
     extra_schema = "".join(
-        f", {f.name} {f.dataType.simpleString()}"
-        for f in corpus.schema.fields if f.name in extra_cols)
-    return corpus.select(id_col, vec_col, *extra_cols).mapInPandas(
+        f", {f.name} {f.dataType.simpleString()}" for f in extras)
+    return corpus.select(id_col, vec_col, *extra_cols).mapInArrow(
         encode, f"{id_col} BIGINT, codes ARRAY<INT>{extra_schema}")
 
 
@@ -372,61 +369,55 @@ def pq_adc_search(codes_df: DataFrame, codebooks: np.ndarray,
 
     Per query: lut[j, c] = <q_subj, codebook[j, c]> (computed once on the
     driver for the bounded query batch); each compressed vector scores as
-    Σ_j lut[j, codes_j] — m lookups, no raw vectors touched. Partition-local
-    top-`shortlist` heaps, then a global per-query rank — the knn_join_bulk
-    merge shape over a 64×-smaller scan.
+    Σ_j lut[j, codes_j] — m lookups, no raw vectors touched. Per-batch
+    tie-inclusive top-`shortlist` cuts, then a global per-query rank — the
+    knn_join_bulk merge shape over a 64×-smaller scan.
 
     Output: (query_id, vec_id, approx_score, rank) — approximate by
     construction (quantization error), feed to ``pq_rerank``.
     """
-    m, k, dsub = codebooks.shape
-    q_pdf = queries.toPandas()  # bounded: the query batch, not the corpus
-    q_ids = q_pdf["query_id"].to_numpy()
-    q_mat = np.stack(q_pdf["query_vec"].to_numpy()).astype(np.float64)
+    q_ids, q_mat = query_batch(queries)  # bounded: the query batch
+    return _adc_shortlist(codes_df, _luts(q_mat, codebooks, rotation), q_ids,
+                          shortlist, id_col, "vec_id")
+
+
+def _luts(q_mat: np.ndarray, codebooks: np.ndarray,
+          rotation: np.ndarray | None) -> np.ndarray:
+    """ADC lookup tables luts[q, j, c] = <query_q subspace j, centroid c>.
+    OPQ rotates the queries into code space first; orthogonality
+    preserves inner products, so the ADC ranking is the raw-space one."""
+    m, _k, dsub = codebooks.shape
     if rotation is not None:
-        # OPQ: rotate queries into code space; orthogonality preserves
-        # inner products, so the ADC ranking is the raw-space ranking
         q_mat = q_mat @ rotation.astype(np.float64)
-    # luts[q, j, c] = <query_q subspace j, centroid c>
-    luts = np.einsum("qjd,jcd->qjc",
-                     q_mat.reshape(len(q_ids), m, dsub), codebooks)
+    return np.einsum("qjd,jcd->qjc", q_mat.reshape(len(q_mat), m, dsub),
+                     codebooks)
+
+
+def _adc_shortlist(scan: DataFrame, luts: np.ndarray, q_ids: np.ndarray,
+                   shortlist: int, id_col: str, out_id: str,
+                   probe=None) -> DataFrame:
+    """The ADC scan of both PQ serve paths: one LUT gather per Arrow
+    batch, optional ``probe(scores, list_ids)`` offset/mask, per-batch
+    tie-inclusive cut, then the global (approx_score desc, id) window.
+    Output: (query_id, out_id, approx_score, rank)."""
+    m = luts.shape[1]
 
     def partial(batches):
-        import heapq
-
-        best: dict[int, list[tuple[float, int]]] = {int(q): [] for q in q_ids}
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            codes = np.stack(pdf["codes"].to_numpy())  # (batch, m)
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            codes = arrow_matrix(batch.column("codes"))  # (batch, m)
             # scores[q, i] = Σ_j luts[q, j, codes[i, j]]
             scores = luts[:, np.arange(m)[None, :], codes].sum(-1)  # (q, batch)
-            take = min(shortlist, len(ids))
-            for qi, qid in enumerate(q_ids):
-                s = scores[qi]
-                # lexsort, not argpartition: exact ADC ties at the batch
-                # boundary (duplicate codes) must keep the id-winning row
-                # or the final (approx_score desc, id) window can surface
-                # a different id — same reasoning as ivf_search_bulk
-                # (operators/ann.py:350) and ivf_pq_search below
-                cand = np.lexsort((ids, -s))[:take]
-                heap = best[int(qid)]
-                for i in cand:
-                    # (score, -id): on equal score the SMALLER id is the
-                    # larger heap item and survives, matching the final
-                    # Window.orderBy(desc(approx_score), vec_id) tie-break
-                    item = (s[i], -int(ids[i]))
-                    if len(heap) < shortlist:
-                        heapq.heappush(heap, item)
-                    elif item > heap[0]:
-                        heapq.heapreplace(heap, item)
-        rows = [(qid, -negvid, sc) for qid, heap in best.items()
-                for sc, negvid in heap]
-        yield pd.DataFrame(rows, columns=["query_id", "vec_id", "approx_score"])
+            if probe is not None:
+                scores = probe(scores, batch.column("list_id").to_numpy())
+            yield per_query_topk(batch.column(id_col).to_numpy(), scores.T,
+                                 q_ids, shortlist, id_col=out_id,
+                                 score_col="approx_score", largest=True)
 
-    survivors = codes_df.mapInPandas(
-        partial, "query_id BIGINT, vec_id BIGINT, approx_score DOUBLE")
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_score"), "vec_id")
+    survivors = scan.mapInArrow(
+        partial, f"query_id BIGINT, {out_id} BIGINT, approx_score DOUBLE")
+    w = Window.partitionBy("query_id").orderBy(F.desc("approx_score"), out_id)
     return (survivors.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= shortlist))
 
@@ -482,11 +473,10 @@ def ivf_pq_search(index, codes_df: DataFrame, codebooks: np.ndarray,
     ivf_search_bulk: the probed-list UNION is scanned once, every batch
     scores all queries with one LUT gather, and (query, row) pairs the
     query did not probe are masked out after the gather — transfer =
-    probed code bytes, full stop. Boundary selection is lexsort on
-    (-score, id), not argpartition: exact ADC ties at the per-batch
-    shortlist cut must keep the id-winning row or the global
-    (approx_score desc, id) window can rank a different id than the flat
-    ADC scan (same reasoning as ivf_search_bulk, operators/ann.py:350).
+    probed code bytes, full stop. The per-batch shortlist cut is
+    tie-inclusive (operators/knn.per_query_topk): exact ADC ties at the
+    boundary all reach the global (approx_score desc, id) window, which
+    picks the id-winning row, so the ranking equals the flat ADC scan's.
 
     ``residual=True`` is the IVFADC scoring rule for residual-encoded
     codes (train_pq_residual + pq_encode(residual_centroids=…)):
@@ -501,69 +491,31 @@ def ivf_pq_search(index, codes_df: DataFrame, codebooks: np.ndarray,
     composes the two, e.g. queries_ann.q_ivf_pq_topk). At nprobe = nlist
     the shortlist ids equal the flat pq_adc_search pipeline bit-for-bit
     (pinned in tests/test_pq.py)."""
-    from parquetaivectorsearch_spark.operators.ann import (_nearest,
-                                                           _pre_query)
+    from parquetaivectorsearch_spark.operators.ann import probe_mask
 
-    m, kk, dsub = codebooks.shape
-    q_pdf = queries.toPandas()  # bounded: the serving batch
-    q_ids = q_pdf["query_id"].to_numpy()
-    q_mat = np.stack(q_pdf["query_vec"].to_numpy()).astype(np.float64)
+    q_ids, q_mat = query_batch(queries)  # bounded: the serving batch
     # rotation (OPQ) applies to the LUT query only; the coarse offset
     # term below stays in raw space — orthogonality preserves <q, r̂>
-    lut_q = q_mat if rotation is None else q_mat @ rotation.astype(np.float64)
-    luts = np.einsum("qjd,jcd->qjc",
-                     lut_q.reshape(len(q_ids), m, dsub), codebooks)
+    luts = _luts(q_mat, codebooks, rotation)
 
-    cents = index.centroids.astype(np.float32)
-    npb = min(nprobe, len(cents))
-    probes = _nearest(_pre_query(q_mat.astype(np.float32), index.metric),
-                      cents, n=npb).reshape(len(q_ids), npb)
-    union = np.array(sorted({int(l) for row in probes for l in row}),
-                     dtype=np.int64)
-    probe_sets = [set(int(x) for x in row) for row in probes]
-    mask_mat = np.array([[int(l) in s for s in probe_sets] for l in union])
+    union, mask_mat = probe_mask(index, q_mat, nprobe)
     # residual offsets: off[q, u] = <query_q, raw-space centroid of
     # union list u> — the coarse term of the IVFADC decomposition
     off = (q_mat @ index.centroids.astype(np.float64)[union, :q_mat.shape[1]].T
            if residual else None)
 
-    def partial(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            lids = pdf["list_id"].to_numpy()
-            codes = np.stack(pdf["codes"].to_numpy())  # (batch, m)
-            scores = luts[:, np.arange(m)[None, :], codes].sum(-1)  # (q, batch)
-            upos = np.searchsorted(union, lids)
-            if off is not None:
-                scores = scores + off[:, upos]
-            allowed = mask_mat[upos].T  # (q, batch)
-            scores[~allowed] = -np.inf
-            out_q, out_i, out_s = [], [], []
-            for qi, qid in enumerate(q_ids):
-                s = scores[qi]
-                finite = np.nonzero(np.isfinite(s))[0]
-                if not len(finite):
-                    continue
-                take = min(shortlist, len(finite))
-                cand = finite[np.lexsort((ids[finite], -s[finite]))[:take]]
-                out_q.extend([int(qid)] * len(cand))
-                out_i.extend(ids[cand].tolist())
-                out_s.extend(s[cand].tolist())
-            yield pd.DataFrame(
-                {"query_id": out_q, id_col: out_i, "approx_score": out_s})
+    def probe(scores, lids):
+        upos = np.searchsorted(union, lids)
+        if off is not None:
+            scores = scores + off[:, upos]
+        scores[~mask_mat[upos].T] = -np.inf  # (q, batch) probe mask
+        return scores
 
     scan = codes_df.filter(
         F.col("list_id").isin([int(x) for x in union])) \
         .select("list_id", id_col, "codes")
-    survivors = scan.mapInPandas(
-        partial, f"query_id BIGINT, {id_col} BIGINT, approx_score DOUBLE")
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_score"), id_col)
-    return (survivors.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= shortlist)
-            .drop("rank"))
+    return _adc_shortlist(scan, luts, q_ids, shortlist, id_col, id_col,
+                          probe).drop("rank")
 
 
 def train_itq(corpus: DataFrame, bits: int | None = None,
@@ -590,8 +542,7 @@ def train_itq(corpus: DataFrame, bits: int | None = None,
     vector as sgn((x − center) @ proj) packed to int64 words; driver-side
     work is one d×d eigh + iters b×b SVDs (trivial at any corpus width,
     same posture as train_opq)."""
-    pdf = _det_sample(corpus, [vec_col], sample_cap)
-    x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+    x = _sample_matrix(corpus, vec_col, sample_cap)
     d = x.shape[1]
     b = bits or d
     center = x.mean(axis=0)
@@ -623,26 +574,26 @@ def itq_encode(corpus: DataFrame, center: np.ndarray, proj: np.ndarray,
     ((x − center) @ proj)[64w + j] ≥ 0 — same packed layout as
     binary_quantize, so functions/vector.hamming_distance serves both.
     One Arrow pass; center/proj ride the closure (d×b floats)."""
-    from typing import Iterator
-
-    import pandas as pd
-
     c64 = center.astype(np.float64)
     p64 = proj.astype(np.float64)
     n_words = max((p64.shape[1] + 63) // 64, 1)
     weights = (1 << np.arange(64, dtype=np.uint64))
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+    def encode(batches):
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            x = arrow_matrix(batch.column(vec_col), np.float64)
             bits = ((x - c64) @ p64) >= 0
             pad = n_words * 64 - bits.shape[1]
             if pad:
                 bits = np.pad(bits, ((0, 0), (0, pad)))
             words = (bits.reshape(len(x), n_words, 64).astype(np.uint64)
                      * weights).sum(axis=2).astype(np.int64)
-            yield pd.DataFrame({"vec_id": pdf[id_col].to_numpy(),
-                                "bcode": list(words)})
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(id_col).cast(pa.int64()),
+                 arrow_list(words, pa.list_(pa.int64()))],
+                names=["vec_id", "bcode"])
 
-    return corpus.select(id_col, vec_col).mapInPandas(
+    return corpus.select(id_col, vec_col).mapInArrow(
         encode, "vec_id BIGINT, bcode ARRAY<BIGINT>")

@@ -349,9 +349,10 @@ def q_knn_topk_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("knn_join_bulk")  # rows-only: float64 einsum ulps differ from the fold
 def q_knn_join_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bulk KNN join: partition-local top-k heaps (mapInPandas + numpy
-    matmul) → global merge. Shuffles P×|Q|×k survivor rows instead of
-    |corpus|×|Q| scored rows; id-set parity vs exact knn_join is tested."""
+    """Bulk KNN join: per-Arrow-batch top-k cuts (mapInArrow + numpy
+    matmul) → global merge. Shuffles batches×|Q|×k survivor rows instead
+    of |corpus|×|Q| scored rows; id-set parity vs exact knn_join is
+    tested."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")

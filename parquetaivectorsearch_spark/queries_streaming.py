@@ -27,14 +27,14 @@ def _staged_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # 2030-01-01 in epoch micros: far past every fixture event (2024-01) + gap +
 # watermark, so the flush event pushes the final watermark beyond all real
-# sessions. Written in the fixture file's raw-long unit (× divisor).
+# sessions. Written as raw epoch micros, the fixture file's unit.
 _FLUSH_TS_US = 1_893_456_000 * 10**6
 
 
-def _write_flush_file(spark: SparkSession, d: str, ts_divisor: int) -> None:
+def _write_flush_file(spark: SparkSession, d: str) -> None:
     """Append one far-future flush event (user_id = -1) as its own parquet
-    file in the staged stream directory, raw ``ts`` in the same unit as the
-    fixture file so the stream's single rebuild expression fits both."""
+    file in the staged stream directory, raw ``ts`` in epoch micros like
+    the fixture file so the stream's single rebuild expression fits both."""
     import pandas as pd
 
     # pandas → Arrow createDataFrame: the list-of-tuples form would take the
@@ -42,7 +42,7 @@ def _write_flush_file(spark: SparkSession, d: str, ts_divisor: int) -> None:
     flush = spark.createDataFrame(
         pd.DataFrame({
             "event_id": pd.array([10**9], dtype="int64"),
-            "ts": pd.array([_FLUSH_TS_US * ts_divisor], dtype="int64"),
+            "ts": pd.array([_FLUSH_TS_US], dtype="int64"),
             "user_id": pd.array([-1], dtype="int64"),
             "event_type": ["flush"], "value": [0.0], "props": ["{}"],
         }),
@@ -59,18 +59,11 @@ def _staged_stream_with_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
     data would be withheld forever in an availableNow run. The flush event
     advances the watermark past all real sessions (the engine's final
     no-data micro-batch then emits them); the flush's own session stays
-    withheld and its user_id is filtered out by the caller.
-
-    The unit probe targets the *fixture file* (not the staged dir): the
-    flush file stores plain int64 ticks, so a dir-level footer probe after
-    staging could pick the wrong file's schema."""
-    from parquetaivectorsearch_spark.sources.catalog import events_ts_micros_divisor
-
-    div = events_ts_micros_divisor(spark, f"{sf_dir}/events.parquet")
+    withheld and its user_id is filtered out by the caller."""
     d = tempfile.mkdtemp(prefix="events_flush_")
     shutil.copy(f"{sf_dir}/events.parquet", f"{d}/events.parquet")
-    _write_flush_file(spark, d, div)
-    return S.read_event_stream(spark, d, ts_unit_divisor=div)
+    _write_flush_file(spark, d)
+    return S.read_event_stream(spark, d)
 
 
 @register("streaming_tumbling_agg", """
@@ -223,14 +216,10 @@ def q_streaming_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     The flush user (-1) is excluded from the result."""
     import tempfile
 
-    from parquetaivectorsearch_spark.sources.catalog import events_ts_micros_divisor
-
-    div = events_ts_micros_divisor(spark, f"{sf_dir}/events.parquet")
     d = tempfile.mkdtemp(prefix="events_upsert_")
     shutil.copy(f"{sf_dir}/events.parquet", f"{d}/events.parquet")
-    _write_flush_file(spark, d, div)
-    stream = S.read_event_stream(spark, d, max_files_per_trigger=1,
-                                 ts_unit_divisor=div)
+    _write_flush_file(spark, d)
+    stream = S.read_event_stream(spark, d, max_files_per_trigger=1)
     state = S.run_latest_state_upsert(
         stream, tempfile.mkdtemp(prefix="latest_state_"))
     return state.filter("user_id >= 0").select(

@@ -269,9 +269,10 @@ def maxsim_prune_candidates(emb: DataFrame, qtoks, nlist: int = 32,
     score — a proven superset of the exact top-k. Factored out so the
     planted-cluster test can measure the candidate fraction directly."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from parquetaivectorsearch_spark.functions.vector import maxsim_score
+    from parquetaivectorsearch_spark.functions.vector import (
+        arrow_matrix, maxsim_score)
     from parquetaivectorsearch_spark.operators.ann import (
         _nearest, _pre_corpus, train_centroids)
 
@@ -301,18 +302,20 @@ def maxsim_prune_candidates(emb: DataFrame, qtoks, nlist: int = 32,
     # certificate keeps the OUTPUT exact under any admissible bound
     # regardless.
     def _assign_resid(it):
-        for pdf in it:
-            if not len(pdf):
+        for batch in it:
+            if not batch.num_rows:
                 continue
-            xr = np.stack(pdf["tvec"].to_numpy())
+            xr = arrow_matrix(batch.column("tvec"))
             x = _pre_corpus(xr.astype(np.float32), "ip", mx)
             lid = _nearest(x, c32).astype(np.int32)
             rn = np.linalg.norm(xr.astype(np.float64) - craw[lid], axis=1)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy(),
-                                "list_id": lid, "resid": rn})
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("vec_id").cast(pa.int64()), pa.array(lid),
+                 pa.array(rn)],
+                names=["vec_id", "list_id", "resid"])
 
     assigned = (tokens.select("vec_id", "tvec")
-                .mapInPandas(_assign_resid,
+                .mapInArrow(_assign_resid,
                              "vec_id bigint, list_id int, resid double")
                 .localCheckpoint(eager=False))
     radii = assigned.groupBy("list_id").agg(F.max("resid").alias("r"))

@@ -121,47 +121,21 @@ def approx_num_rows(df: DataFrame) -> int | None:
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.ts normalized to TIMESTAMP_NTZ, branching on the dtype the
     scan actually produced — the Spark analog of the reference's schema
-    walk before reading (Program.cs:51-63). Fixture generations differ:
+    walk before reading (Program.cs:51-63). The fixtures store parquet
+    TIMESTAMP(MICROS), which Spark reads as TIMESTAMP_NTZ
+    (isAdjustedToUTC=false) — pass through; a UTC-adjusted file arrives as
+    TIMESTAMP and is cast to NTZ (lossless under the repo's UTC session
+    timezone, session.py:67). No session conf is touched.
 
-    - parquet TIMESTAMP(MICROS) (current fixtures): Spark reads it as
-      TIMESTAMP_NTZ (isAdjustedToUTC=false) — pass through; if a future
-      fixture is UTC-adjusted it arrives as TIMESTAMP and is cast to NTZ
-      (lossless under the repo's UTC session timezone, session.py:67).
-    - parquet TIMESTAMP(NANOS) (older fixtures): the vectorized reader
-      rejects it (PARQUET_TYPE_ILLEGAL), so ``nanosAsLong`` reads raw
-      int64 nanos, rebuilt with *integer* µs arithmetic: ``ts DIV 1000``
-      (epoch-nanos ~1.7e18 exceed 2^53; double division corrupts µs) onto
-      an NTZ epoch base via ``timestampadd`` (``timestamp_micros`` is LTZ).
-
-    Either way the result matches DuckDB's TIMESTAMP(µs) view of the file
-    (asserted in tests/test_sources.py fixture-parity test).
+    The result matches DuckDB's TIMESTAMP(µs) view of the file (asserted
+    in tests/test_sources.py fixture-parity test).
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/events.parquet")
     from pyspark.sql import types as T
 
-    ts_type = df.schema["ts"].dataType
-    if isinstance(ts_type, T.LongType):  # TIMESTAMP(NANOS) via nanosAsLong
-        return df.withColumn(
-            "ts",
-            F.expr("timestampadd(MICROSECOND, ts DIV 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"),
-        )
-    if isinstance(ts_type, T.TimestampType):  # UTC-adjusted instant
+    if isinstance(df.schema["ts"].dataType, T.TimestampType):  # UTC instant
         return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     return df  # already TIMESTAMP_NTZ
-
-
-def events_ts_micros_divisor(spark: SparkSession, path: str) -> int:
-    """Raw-int64 unit probe for readers that force ``ts`` to LongType
-    (the streaming source): 1000 when the file stores TIMESTAMP(NANOS)
-    (raw longs are nanos), 1 when it stores TIMESTAMP(MICROS) (the
-    vectorized reader hands back raw micros under a LongType user schema).
-    One cheap footer read — no data scan."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    from pyspark.sql import types as T
-
-    probe = spark.read.option("pathGlobFilter", "*.parquet").parquet(path)
-    return 1000 if isinstance(probe.schema["ts"].dataType, T.LongType) else 1
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -24,9 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # readStream needs a declared schema; forcing ts to LongType reads the raw
-# int64 ticks for BOTH fixture generations — TIMESTAMP(NANOS) files yield
-# raw nanos (via nanosAsLong), TIMESTAMP(MICROS) files yield raw micros —
-# and the per-path unit probe below picks the right divisor.
+# int64 ticks of the fixtures' TIMESTAMP(MICROS) column as epoch micros.
 EVENTS_RAW_SCHEMA = T.StructType([
     T.StructField("event_id", T.LongType()),
     T.StructField("ts", T.LongType()),
@@ -45,24 +43,18 @@ _DAY_OF = "date_from_unix_date(CAST(unix_micros({c}) DIV 86400000000 AS INT))"
 
 
 def read_event_stream(spark: SparkSession, path: str,
-                      max_files_per_trigger: int | None = None,
-                      ts_unit_divisor: int | None = None) -> DataFrame:
+                      max_files_per_trigger: int | None = None) -> DataFrame:
     """File-source stream of events. `path` is a directory (or an sf dir —
     pathGlobFilter picks the events file); each new file is a micro-batch
     input, the streaming analog of the reference's directory scan
-    (Program.cs:31). The raw-long unit is probed per path (nanos vs micros
-    fixture generations — see sources/catalog.py), then rebuilt with
-    integer ``DIV`` (epoch-nanos exceed 2^53; double division corrupts µs).
+    (Program.cs:31). The raw ``ts`` long is epoch micros (the fixtures'
+    TIMESTAMP(MICROS)) and becomes an instant via ``timestamp_micros``.
     """
-    from parquetaivectorsearch_spark.sources.catalog import events_ts_micros_divisor
-
-    div = ts_unit_divisor if ts_unit_divisor is not None \
-        else events_ts_micros_divisor(spark, path)
     reader = spark.readStream.schema(EVENTS_RAW_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.option("pathGlobFilter", "*.parquet").parquet(path)
-    return stream.withColumn("ts", F.expr(f"timestamp_micros(ts DIV {div})"))
+    return stream.withColumn("ts", F.expr("timestamp_micros(ts)"))
 
 
 def _ephemeral_checkpoint_dir() -> str:
@@ -121,6 +113,10 @@ def run_available_now(stream_df: DataFrame, output_mode: str,
     # the batch still pays a full state-store open/commit + offset/commit
     # log cycle per query. Measured: −0.7 to −1.5 s per update-mode
     # streaming query at sf0.1, memory-sink contents identical.
+    # Invariant this relies on: every applyInPandasWithState in the
+    # package runs with "NoTimeout" — a processing- or event-time timeout
+    # fires only in a batch, and the skipped no-data batch would withhold
+    # those timeout outputs. Pinned by tests/test_source_guards.py.
     if output_mode != "append":
         spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
                        "false")

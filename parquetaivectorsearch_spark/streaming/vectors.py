@@ -162,8 +162,9 @@ def streaming_centroid_update(spark: SparkSession, staged_dir: str,
     is shared with the batch tiers and the SQL oracle."""
     import pandas as pd
 
+    from parquetaivectorsearch_spark.functions.vector import arrow_matrix
     from parquetaivectorsearch_spark.operators.kmeans import (
-        _argmin_batch, _cent_arrays)
+        _argmin_batch, _cent_arrays, _partial_sums)
 
     cids_np, C, cn = _cent_arrays(cents)
 
@@ -173,20 +174,13 @@ def streaming_centroid_update(spark: SparkSession, staged_dir: str,
     stream = reader.parquet(staged_dir)
 
     def part(it):
-        for pdf in it:
-            if not len(pdf):
+        for batch in it:
+            if not batch.num_rows:
                 continue
-            X = np.stack(pdf["embedding"].to_numpy()).astype(
-                np.float64, copy=False)
-            a = _argmin_batch(X, C, cn)
-            uniq = np.unique(a)
-            yield pd.DataFrame({
-                "cid": [int(cids_np[j]) for j in uniq],
-                "psum": [X[a == j].sum(axis=0).tolist() for j in uniq],
-                "cnt": [int((a == j).sum()) for j in uniq],
-            })
+            X = arrow_matrix(batch.column("embedding"), np.float64)
+            yield _partial_sums(X, _argmin_batch(X, C, cn), cids_np)
 
-    partials = stream.mapInPandas(
+    partials = stream.mapInArrow(
         part, "cid int, psum array<double>, cnt bigint")
 
     def update(key, pdfs, state):

@@ -6,7 +6,7 @@ old encoding — batch died at analysis time, streaming returned *wrong*
 timestamps (micros ÷ 1000). This file pins the invariant that would have
 caught it instantly: the loaded min/max/count of ``ts`` must equal DuckDB's
 independent view of the same parquet file, for both the batch catalog path
-and the streaming raw-long path, on every fixture generation.
+and the streaming raw-long path. Neither path may change session conf.
 """
 
 from __future__ import annotations
@@ -19,7 +19,6 @@ import pytest
 
 from parquetaivectorsearch_spark import streaming as S
 from parquetaivectorsearch_spark.sources import load_table
-from parquetaivectorsearch_spark.sources.catalog import events_ts_micros_divisor
 from tests.conftest import SF_SMOKE
 
 
@@ -52,6 +51,9 @@ def test_batch_events_ts_matches_duckdb(spark):
 
 
 def test_stream_events_ts_matches_duckdb(spark, tmp_path):
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key, None)
+    load_table(spark, SF_SMOKE, "events")
     lo, hi, n = _duck_ts_view(f"{SF_SMOKE}/events.parquet")
     d = str(tmp_path / "ev")
     (tmp_path / "ev").mkdir()
@@ -69,48 +71,8 @@ def test_stream_events_ts_matches_duckdb(spark, tmp_path):
     # Streaming rebuilds instants under a UTC reading of the file's
     # wall-clock — epoch µs must equal DuckDB's epoch_us exactly.
     assert (row.lo, row.hi, row.n) == (lo, hi, n)
-
-
-def test_ts_unit_probe(spark):
-    # Current fixtures store TIMESTAMP(MICROS): raw longs are µs, divisor 1.
-    assert events_ts_micros_divisor(spark, f"{SF_SMOKE}/events.parquet") == 1
-
-
-def test_nanos_generation_roundtrip(spark, tmp_path):
-    """Synthesize the *old* TIMESTAMP(NANOS) fixture encoding and assert
-    both loaders still read it correctly (divisor 1000 path)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    lo_us = 1_704_067_200_000_000  # 2024-01-01 00:00:00 UTC
-    ts_ns = [lo_us * 1000, (lo_us + 5_000_000) * 1000]
-    tbl = pa.table({
-        "event_id": pa.array([1, 2], pa.int64()),
-        "ts": pa.array(ts_ns, pa.timestamp("ns")),
-        "user_id": pa.array([7, 7], pa.int64()),
-        "event_type": pa.array(["a", "b"]),
-        "value": pa.array([1.0, 2.0], pa.float64()),
-        "props": pa.array(["{}", "{}"]),
-    })
-    d = tmp_path / "nanos_sf"
-    d.mkdir()
-    pq.write_table(tbl, str(d / "events.parquet"),
-                   use_deprecated_int96_timestamps=False,
-                   coerce_timestamps=None)
-    assert events_ts_micros_divisor(spark, str(d / "events.parquet")) == 1000
-
-    ev = load_table(spark, str(d), "events")
-    rows = ev.orderBy("event_id").collect()
-    assert [r.ts.isoformat() for r in rows] == [
-        "2024-01-01T00:00:00", "2024-01-01T00:00:05"]
-
-    stream = S.read_event_stream(spark, str(d))
-    sink = S.run_available_now(
-        stream.groupBy().agg(F.min(F.unix_micros("ts")).alias("lo"),
-                             F.max(F.unix_micros("ts")).alias("hi")),
-        "complete")
-    row = sink.collect()[0]
-    assert (row.lo, row.hi) == (lo_us, lo_us + 5_000_000)
+    # neither the batch loader nor the stream leaves session conf behind
+    assert spark.conf.get(key, None) == before
 
 
 def test_all_tables_match_duckdb_shape(spark):

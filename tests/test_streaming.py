@@ -25,9 +25,8 @@ def _stage_split(spark, n_files=3):
     n micro-batches."""
     src = load_table(spark, SF_SMOKE, "events")
     d = tempfile.mkdtemp(prefix="ev_split_")
-    # re-stage through spark.read so whatever dtype the fixture generation
-    # uses round-trips; read_event_stream probes the staged files' unit
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # re-stage through spark.read so the fixture's TIMESTAMP(MICROS) column
+    # round-trips unchanged
     raw = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
     raw.repartition(n_files).write.mode("overwrite").parquet(d)
     return S.read_event_stream(spark, d, max_files_per_trigger=1)
@@ -615,7 +614,7 @@ def test_cms_batch_streaming_agree_on_negative_and_huge_uids(spark):
     d = tempfile.mkdtemp(prefix="cms_adv_")
     ev.coalesce(1).write.mode("overwrite").parquet(d)
     got_rows = S.run_available_now(
-        S.type_cms_cells(S.read_event_stream(spark, d, ts_unit_divisor=1)),
+        S.type_cms_cells(S.read_event_stream(spark, d)),
         "update").collect()
     got = {(r.j, r.col): r.cell for r in got_rows}
     assert got == want
