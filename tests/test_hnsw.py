@@ -6,9 +6,11 @@ join-free serve-path plan."""
 
 from __future__ import annotations
 
-import tempfile
+from collections import OrderedDict
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from parquetaivectorsearch_spark.operators import hnsw as H
@@ -39,7 +41,7 @@ def test_hnsw_recall_vs_exact(spark):
     assert recall >= 0.9, f"recall@20 = {recall:.3f}"
 
 
-def test_hnsw_persist_load_roundtrip(spark):
+def test_hnsw_persist_load_roundtrip(spark, tmp_path):
     """Persist → load must return the identical result set (vectors ride
     with the graph — no corpus needed after load)."""
     emb = load_table(spark, SF_SMOKE, "embeddings")
@@ -47,7 +49,7 @@ def test_hnsw_persist_load_roundtrip(spark):
     graph = H.build_hnsw(emb, n_partitions=4)
     mem = {(r.query_id, r.vec_id, round(r.distance, 6))
            for r in H.hnsw_search(graph, queries, k=20).collect()}
-    path = tempfile.mkdtemp(prefix="hnsw_rt_") + "/graph"
+    path = str(tmp_path / "graph")
     H.write_hnsw(graph, path)
     loaded = H.read_hnsw(spark, path)
     assert "embedding" in loaded.columns
@@ -57,7 +59,7 @@ def test_hnsw_persist_load_roundtrip(spark):
     assert len(mem) == 20
 
 
-def test_hnsw_topology_only_rebind(spark):
+def test_hnsw_topology_only_rebind(spark, tmp_path):
     """Reference-parity persistence (topology only, Program.cs:231-244)
     still works: vectors re-bound from the corpus at search
     (Program.cs:256), identical results to the vector-carrying layout."""
@@ -66,7 +68,7 @@ def test_hnsw_topology_only_rebind(spark):
     graph = H.build_hnsw(emb, n_partitions=4)
     full = {(r.query_id, r.vec_id, round(r.distance, 6))
             for r in H.hnsw_search(graph, queries, k=20).collect()}
-    path = tempfile.mkdtemp(prefix="hnsw_topo_") + "/graph"
+    path = str(tmp_path / "graph")
     H.write_hnsw(graph, path, topology_only=True)
     loaded = H.read_hnsw(spark, path)
     assert "embedding" not in loaded.columns
@@ -76,26 +78,180 @@ def test_hnsw_topology_only_rebind(spark):
     assert full == rebound
 
 
-def test_hnsw_search_plan_has_no_corpus_join(spark):
-    """The serve path must be join-free (VERDICT r1 item 3): the only scan
-    feeding the search applyInPandas is the graph itself. A topology-only
-    graph with no corpus errors out instead of silently joining."""
+def _executed_plans_and_jobs(spark, fn):
+    """Run ``fn`` under a job group → (its physical plans, its job count),
+    read back from Spark's status stores."""
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    bus = sc._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        bus.waitUntilEmpty()
+        return list(jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+            store.executionsList()))
+
+    seen = {e.executionId() for e in executions()}
+    sc.setJobGroup("hnsw_serve_guard", "hnsw serve-path guard")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    plans = [e.physicalPlanDescription() for e in executions()
+             if e.executionId() not in seen]
+    jobs = sc.statusTracker().getJobIdsForGroup("hnsw_serve_guard")
+    return plans, len(jobs)
+
+
+def test_hnsw_search_plan_has_no_corpus_join(spark, tmp_path):
+    """The serve path of a persisted graph is join-free and shuffle-free
+    (VERDICT r1 item 3): every plan a search executes has no Join and no
+    Exchange — parts are read whole by their own task, never regrouped on
+    part_id — and the search runs at most 4 jobs. A topology-only graph
+    with no corpus errors out instead of silently joining."""
     emb = load_table(spark, SF_SMOKE, "embeddings")
     queries = _queries(emb, n=1)
     graph = H.build_hnsw(emb, n_partitions=2)
-    path = tempfile.mkdtemp(prefix="hnsw_plan_") + "/graph"
+    path = str(tmp_path / "graph")
     H.write_hnsw(graph, path)
-    loaded = H.read_hnsw(spark, path)
-    plan = H.hnsw_search(loaded, queries, k=5) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan, plan
+    plans, jobs = _executed_plans_and_jobs(
+        spark, lambda: H.hnsw_search(H.read_hnsw(spark, path), queries,
+                                     k=5).collect())
+    assert plans
+    for plan in plans:
+        assert "Join" not in plan, plan
+        assert "Exchange" not in plan, plan
+    assert jobs <= 4, jobs
     # topology-only without corpus → explicit error, not a hidden join
-    topo = loaded.drop("embedding")
+    topo = H.read_hnsw(spark, path).drop("embedding")
     try:
         H.hnsw_search(topo, queries, k=5)
         assert False, "expected ValueError for topology-only graph"
     except ValueError:
         pass
+
+
+def _rows(df):
+    return [(r.query_id, r.vec_id, r.distance) for r in df.collect()]
+
+
+def test_hnsw_part_loader_ignores_row_order(spark):
+    """The loader's adjacency matrices equal a per-node loop over the
+    neighbor lists, and one part fed in shuffled row orders loads to the
+    same search form and answers identically: nodes are placed by vec_id
+    and the entry point is the build's (the smallest vec_id on the top
+    layer), not whichever top-layer row arrives first."""
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    tbl = (H.build_hnsw(emb, n_partitions=1, params=H.HNSWParams(M=4))
+           .toArrow().select(["vec_id", "embedding", "neighbors"]))
+    q_ids, q_mat = knn.query_batch(_queries(emb, n=6), np.float32)
+    ref = H._load_part(tbl)
+    # the per-node loop the vectorized loader replaces, as the reference
+    rows = dict(zip(tbl.column("vec_id").to_pylist(),
+                    tbl.column("neighbors").to_pylist()))
+    pos = {v: i for i, v in enumerate(ref.vids.tolist())}
+    for lvl, (nbr, cnt) in enumerate(ref.layers):
+        for i, v in enumerate(ref.vids.tolist()):
+            want = [pos[u] for u in rows[v][lvl]] if lvl < len(rows[v]) else []
+            assert nbr[i, :cnt[i]].tolist() == want, (lvl, v)
+    n_lvl = np.array([len(r) for r in tbl.column("neighbors").to_pylist()])
+    top = tbl.column("vec_id").to_numpy()[n_lvl == n_lvl.max()]
+    assert len(top) > 1  # the entry choice is not forced
+    assert ref.vids[ref.entry] == top.min()
+    want = H._search_part(ref, q_ids, q_mat, 10, 32)
+    rng = np.random.RandomState(5)
+    for perm in (np.arange(tbl.num_rows)[::-1], rng.permutation(tbl.num_rows)):
+        part = H._load_part(tbl.take(pa.array(perm)))
+        assert part.entry == ref.entry
+        assert H._search_part(part, q_ids, q_mat, 10, 32).equals(want)
+
+
+def test_hnsw_resident_serve_after_overwrite(spark, tmp_path):
+    """Search graph A (warming the worker caches), overwrite the same
+    path with graph B: the next read_hnsw serves B's answers only."""
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    queries = _queries(emb, n=4)
+    path = str(tmp_path / "graph")
+    a = emb.filter(F.col("vec_id") % 2 == 0)
+    b = emb.filter(F.col("vec_id") % 2 == 1)
+    H.write_hnsw(H.build_hnsw(a, n_partitions=2), path)
+    for _ in range(2):
+        got_a = _rows(H.hnsw_search(H.read_hnsw(spark, path), queries, k=10))
+    assert got_a and all(v % 2 == 0 for _, v, _ in got_a)
+    graph_b = H.build_hnsw(b, n_partitions=2)
+    H.write_hnsw(graph_b, path)
+    got_b = _rows(H.hnsw_search(H.read_hnsw(spark, path), queries, k=10))
+    assert got_b == _rows(H.hnsw_search(graph_b, queries, k=10))
+    assert all(v % 2 == 1 for _, v, _ in got_b)
+
+
+def test_hnsw_resident_serve_after_append(spark, tmp_path):
+    """Warm the caches, append a segment: the next read_hnsw serves the
+    appended ids, and the resident path answers exactly like the grouped
+    path over the same files."""
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    queries = emb.filter(F.col("vec_id") % 2 == 1).limit(4).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
+    path = str(tmp_path / "graph")
+    H.write_hnsw(H.build_hnsw(emb.filter(F.col("vec_id") % 2 == 0),
+                              n_partitions=2), path)
+    for _ in range(2):
+        H.hnsw_search(H.read_hnsw(spark, path), queries, k=10).collect()
+    H.hnsw_append(spark, path, emb.filter(F.col("vec_id") % 2 == 1))
+    resident = _rows(H.hnsw_search(H.read_hnsw(spark, path), queries, k=10))
+    assert any(v % 2 == 1 for _, v, _ in resident)
+    grouped = _rows(H.hnsw_search(H.read_hnsw(spark, path).select("*"),
+                                  queries, k=10))
+    assert resident == grouped
+
+
+def test_hnsw_search_honours_filter_on_read_graph(spark, tmp_path):
+    """A frame derived from read_hnsw takes the grouped path, so its
+    filter holds: a part_id filter serves only that part, and a vec_id
+    filter serves only the rows it keeps (edges into removed rows are
+    dropped at load)."""
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    queries = _queries(emb, n=4)
+    path = str(tmp_path / "graph")
+    H.write_hnsw(H.build_hnsw(emb, n_partitions=4), path)
+    g = H.read_hnsw(spark, path)
+    part0 = {r.vec_id for r in g.filter("part_id = 0").select("vec_id").collect()}
+    got = _rows(H.hnsw_search(g.filter("part_id = 0"), queries, k=5))
+    assert len(got) == 20 and {v for _, v, _ in got} <= part0
+    got = _rows(H.hnsw_search(g.filter(F.col("vec_id") % 3 == 0), queries, k=5))
+    assert len(got) == 20 and all(v % 3 == 0 for _, v, _ in got)
+
+
+def test_hnsw_resident_cache_bound_and_key(spark, tmp_path, monkeypatch):
+    """The worker cache holds parts up to _RESIDENT_BYTES, least recently
+    used out first, and keys them by file (path, size, mtime): a part
+    rewritten under the same file name is reloaded, not served stale."""
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    path = str(tmp_path / "graph")
+    H.write_hnsw(H.build_hnsw(emb, n_partitions=2), path)
+    files = H._part_files(H.read_hnsw(spark, path))
+    assert [len(f) for f in files] == [1, 1]
+    monkeypatch.setattr(H, "_resident", OrderedDict())
+    p0 = H._resident_part(files[0])
+    assert H._resident_part(files[0]) is p0  # a hit
+    p1 = H._resident_part(files[1])
+    assert list(H._resident.values()) == [p0, p1]
+    monkeypatch.setattr(H, "_resident", OrderedDict())
+    monkeypatch.setattr(H, "_RESIDENT_BYTES", max(p0.nbytes, p1.nbytes))
+    H._resident_part(files[0])
+    p1 = H._resident_part(files[1])  # over the bound: part 0 goes
+    assert list(H._resident.values()) == [p1]
+    assert H._resident_part(files[1]) is p1
+    monkeypatch.setattr(H, "_RESIDENT_BYTES", 0)
+    assert H._resident_part(files[0]).vids.tolist() == p0.vids.tolist()
+    assert not H._resident  # served, then dropped
+    # same file name, new content → reloaded
+    monkeypatch.setattr(H, "_RESIDENT_BYTES", 1 << 30)
+    H._resident_part(files[0])
+    local = files[0][0].removeprefix("file://")
+    tbl = pq.read_table(local)
+    pq.write_table(tbl.slice(0, tbl.num_rows // 2), local)
+    assert len(H._resident_part(files[0]).vids) == tbl.num_rows // 2
 
 
 def _clustered_fixture(spark, n_clusters=30, per_cluster=40, dim=16, seed=7):
@@ -160,23 +316,14 @@ def test_hnsw_results_are_global_topk_shape(spark):
         assert ds == sorted(ds)
 
 
-def test_hnsw_append_serves_new_vectors_without_rebuild(spark):
+def test_hnsw_append_serves_new_vectors_without_rebuild(spark, tmp_path):
     """Segment-based append: new vectors land as fresh part_id graphs and
     are immediately servable through the same fan-out search; recall over
     the COMBINED corpus stays at the exact-oracle gate."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from parquetaivectorsearch_spark.operators import hnsw as H
-    from parquetaivectorsearch_spark.operators import knn
-    from parquetaivectorsearch_spark.sources import load_table
-    from tests.conftest import SF_SMOKE
-
     emb = load_table(spark, SF_SMOKE, "embeddings")
     first = emb.filter(F.col("vec_id") % 2 == 0)
     second = emb.filter(F.col("vec_id") % 2 == 1)
-    path = tempfile.mkdtemp(prefix="hnsw_append_") + "/graph"
+    path = str(tmp_path / "graph")
     H.write_hnsw(H.build_hnsw(first, n_partitions=2), path)
     H.hnsw_append(spark, path, second, n_partitions=2)
 

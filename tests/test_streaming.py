@@ -232,12 +232,10 @@ def test_stream_ingest_then_compact_cycle(spark):
     assert after == before
 
 
-def test_stream_hnsw_ingest_then_compact(spark):
+def test_stream_hnsw_ingest_then_compact(spark, tmp_path):
     """Segment lifecycle under streaming: 4 micro-batch appends create 4
     new segments; compact folds everything to the target count; all ids
     survive; streamed vectors are served (recall gate vs exact)."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from parquetaivectorsearch_spark.operators import hnsw as H
@@ -247,7 +245,7 @@ def test_stream_hnsw_ingest_then_compact(spark):
     from tests.conftest import SF_SMOKE
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    work = tempfile.mkdtemp(prefix="hnsw_cycle_")
+    work = str(tmp_path)
     path = f"{work}/graph"
     H.write_hnsw(H.build_hnsw(emb.filter(F.col("vec_id") % 2 == 0),
                               n_partitions=2), path)
