@@ -35,4 +35,10 @@ from parquetaivectorsearch_spark.operators import (  # noqa: E402,F401
     skew,
 )
 from parquetaivectorsearch_spark.functions import text, vector  # noqa: E402,F401
-from parquetaivectorsearch_spark.session import get_spark, ship_package  # noqa: E402,F401
+from parquetaivectorsearch_spark.session import (  # noqa: E402,F401
+    get_spark,
+    reuse_zip_directories,
+    ship_package,
+)
+
+reuse_zip_directories()
