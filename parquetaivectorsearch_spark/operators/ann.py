@@ -17,9 +17,10 @@ chasing structure that does not distribute. The Spark-native equivalent of
   parquet partition directories, so probing nprobe lists is a partition-
   pruned scan. At 100 TB with nlist=4096 / nprobe=64, a search reads ~1.6%
   of the files; no driver state, no single-machine index.
-- **search**: nearest-nprobe centroids per query (tiny, driver/broadcast) →
-  scan pruned lists → exact dot-product distance → per-query top-k via the
-  same TakeOrderedAndProject / window machinery as the exact path.
+- **search**: nearest-nprobe centroids per query (tiny, on the driver) →
+  ONE scan of the probed-list union → one matmul per Arrow batch, masked
+  to each query's own lists → per-query top-k through the same
+  (distance, id) window as the exact path.
 
 **Metric handling.** The reference's metric is dot-product distance over
 vectors that are unit-norm in its dataset (Program.cs:29-30) but not in
@@ -45,6 +46,7 @@ arXiv:1603.09320 §5).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
@@ -54,9 +56,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from parquetaivectorsearch_spark.functions.vector import (
-    arrow_list, arrow_matrix, vec_dot_arrow)
-from parquetaivectorsearch_spark.operators.knn import per_query_topk, query_batch
+from parquetaivectorsearch_spark.functions.vector import arrow_list, arrow_matrix
+from parquetaivectorsearch_spark.operators.knn import (
+    per_query_topk, per_query_within, query_batch)
 
 METRICS = ("ip", "cosine", "l2")
 
@@ -361,7 +363,8 @@ def write_centroids(spark: SparkSession, path: str, centroids: np.ndarray,
 
 def probe_lists(queries: DataFrame, index: IVFIndex, nprobe: int,
                 vec_col: str = "query_vec") -> DataFrame:
-    """(query row) → nprobe rows (…, list_id): the lists to scan per query."""
+    """(query row) → nprobe rows (…, list_id): knn_graph's distributed
+    probe (its query side is the corpus); probe_mask's arithmetic."""
     c = index.centroids.astype(np.float32)
     metric = index.metric
     npb = min(nprobe, len(c))
@@ -375,81 +378,36 @@ def probe_lists(queries: DataFrame, index: IVFIndex, nprobe: int,
     return queries.withColumn("list_id", F.explode(probes(F.col(vec_col))))
 
 
-def probe_mask(index: IVFIndex, q_mat: np.ndarray, nprobe: int
-               ) -> tuple[np.ndarray, np.ndarray]:
-    """probe_lists' arithmetic on a driver-side query batch: (sorted
-    probed-list union int64[u], mask[u, nq] = query j probes union[i])."""
+def probe_mask(index: IVFIndex, queries: DataFrame, nprobe: int
+               ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """The driver step of every IVF kernel: pull the bounded query batch
+    and pick its lists. Returns (q_ids int64[nq], q_mat float64[nq, d],
+    sorted probed-list union int64[u], mask[u, nq] = query j probes
+    union[i]). A 0-row batch keeps width d and probes no list, so the
+    kernel's list_id-pruned scan reads nothing: an empty result."""
+    q_ids, q_mat = query_batch(queries)
     cents = index.centroids.astype(np.float32)
+    if not len(q_ids):  # arrow_matrix has no width to give a 0-row batch
+        q_mat = q_mat.reshape(0, cents.shape[1] - (index.metric == "ip"))
     npb = min(nprobe, len(cents))
     probes = _nearest(_pre_query(q_mat.astype(np.float32), index.metric),
                       cents, n=npb).reshape(len(q_mat), npb)
     union = np.unique(probes).astype(np.int64)
-    return union, (union[:, None, None] == probes[None, :, :]).any(axis=2)
+    return (q_ids, q_mat, union,
+            (union[:, None, None] == probes[None, :, :]).any(axis=2))
 
 
-def ivf_search(index: IVFIndex, queries: DataFrame, k: int = 20,
-               nprobe: int = 4, id_col: str = "vec_id",
-               vec_col: str = "embedding", where=None) -> DataFrame:
-    """ANN top-k per query by dot-product distance (the reference's metric).
-    `queries` is (query_id, query_vec), small enough to broadcast (the
-    serving fan-out shape).
-
-    Plan: broadcast(queries × their probe lists) ⋈ lists on list_id —
-    Catalyst pushes the list_id filter into the partitioned scan when
-    `index.lists` comes from a partitioned artifact — → numpy batch scoring
-    → per-query top-k. Output: (query_id, vec_id, distance, rank).
-
-    ``where``: optional metadata predicate (a Column) applied to the lists
-    BEFORE scoring — pre-filtered vector search. The inverted lists keep
-    every corpus column, so the predicate composes with partition pruning:
-    the scan reads nprobe list directories and pushes the predicate into
-    them, rather than post-filtering an oversampled top-k' result.
-    """
-    scored = _probed_distances(index, queries, nprobe, id_col, vec_col, where)
-    w = Window.partitionBy("query_id").orderBy("distance", id_col)
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def _probed_distances(index: IVFIndex, queries: DataFrame, nprobe: int,
-                      id_col: str, vec_col: str, where) -> DataFrame:
-    """(query_id, id, distance) for every (query, row of a probed list):
-    the broadcast probe join scored by the Arrow dot UDF."""
-    lists = index.lists if where is None else index.lists.filter(where)
-    return (lists.join(F.broadcast(probe_lists(queries, index, nprobe)),
-                       "list_id")
-            .select("query_id", F.col(id_col),
-                    (F.lit(1.0) - vec_dot_arrow(F.col(vec_col),
-                                                F.col("query_vec"))
-                     ).alias("distance")))
-
-
-def ivf_search_bulk(index: IVFIndex, queries: DataFrame, k: int = 20,
-                    nprobe: int = 4, id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
-    """Arrow-bulk IVF serve: identical probe semantics to ivf_search, but
-    the probed-list union is scanned ONCE and each Arrow batch scores all
-    queries with a single numpy matmul.
-
-    Why it exists: ivf_search's broadcast probe join duplicates every
-    matched corpus row per probing query AND ships the query vector on
-    every row through the Arrow-UDF scorer — at the reference's width
-    (1536 dims, 8 queries, nprobe/nlist = 1/4) that is ~8× the Arrow
-    bytes of the probed data (measured 3.1s vs the brute-force bulk
-    path's 0.84s at 50k×1536, BENCH_NOTES r8). Here transfer = probed
-    bytes, full stop: per-query probe sets are computed driver-side
-    against the (tiny) centroid matrix — exactly probe_lists' arithmetic,
-    so recall is bit-identical — the scan prunes to the probed-list
-    UNION (partition-pruned on a persisted artifact), and rows a query
-    did not probe are masked to +inf after the batch matmul (wasted
-    flops, saved bandwidth — the wide regime is bandwidth-bound). Each
-    batch emits ≤ k rows per query; the global merge is one tiny window
-    over k × n_batches × n_queries rows.
-
-    ``queries`` is a bounded serving batch (same contract as
-    knn_join_bulk: driver-materialized). Output matches ivf_search:
-    (query_id, vec_id, distance, rank); ties break on (distance, id)."""
-    q_ids, q_mat = query_batch(queries, np.float32)  # bounded: the serving batch
-    union, mask_mat = probe_mask(index, q_mat, nprobe)
+def _probed_scan(index: IVFIndex, queries: DataFrame, nprobe: int,
+                 id_col: str, vec_col: str, where, cut) -> DataFrame:
+    """The IVF scoring kernel: ONE scan of the probed-list union (``where``
+    filters the lists, the list_id isin prunes them — partition pruning
+    on a persisted artifact); each Arrow batch scores every query with
+    one float32 matmul into float64 distances, masks the (row, query)
+    pairs whose query did not probe the row's list to +inf, and emits
+    ``cut(ids, dist[rows, nq], q_ids)`` as (query_id, id_col, distance).
+    Transfer is the probed bytes; the queries ride the closure."""
+    q_ids, q_mat, union, mask_mat = probe_mask(index, queries, nprobe)
+    q32 = q_mat.astype(np.float32)
 
     def score(batches):
         for batch in batches:
@@ -457,20 +415,43 @@ def ivf_search_bulk(index: IVFIndex, queries: DataFrame, k: int = 20,
                 continue
             lids = batch.column("list_id").to_numpy()
             emb = arrow_matrix(batch.column(vec_col), np.float32)
-            dist = 1.0 - (emb @ q_mat.T).astype(np.float64)  # (rows, nq)
-            allowed = mask_mat[np.searchsorted(union, lids)]  # (rows, nq)
-            dist[~allowed] = np.inf
-            yield per_query_topk(batch.column(id_col).to_numpy(), dist,
-                                 q_ids, k, id_col=id_col)
+            dist = 1.0 - (emb @ q32.T).astype(np.float64)  # (rows, nq)
+            dist[~mask_mat[np.searchsorted(union, lids)]] = np.inf
+            yield cut(batch.column(id_col).to_numpy(), dist, q_ids)
 
-    scan = index.lists.filter(
-        F.col("list_id").isin([int(x) for x in union])) \
-        .select("list_id", id_col, vec_col)
-    partials = scan.mapInArrow(
-        score, f"query_id BIGINT, {id_col} BIGINT, distance DOUBLE")
+    lists = index.lists if where is None else index.lists.filter(where)
+    return (lists.filter(F.col("list_id").isin([int(x) for x in union]))
+            .select("list_id", id_col, vec_col)
+            .mapInArrow(score,
+                        f"query_id BIGINT, {id_col} BIGINT, distance DOUBLE"))
+
+
+def ivf_search(index: IVFIndex, queries: DataFrame, k: int = 20,
+               nprobe: int = 4, id_col: str = "vec_id",
+               vec_col: str = "embedding", where=None) -> DataFrame:
+    """ANN top-k per query by dot-product distance (the reference's metric).
+    Output: (query_id, vec_id, distance, rank); ties break on
+    (distance, id).
+
+    ``queries`` (query_id, query_vec) is a bounded serving batch, pulled
+    to the driver when this is called (the knn_join_bulk contract).
+    _probed_scan keeps each batch's tie-inclusive top-k per query; one
+    window over k × n_batches × n_queries rows merges them.
+
+    ``where``: optional metadata predicate (a Column) applied to the lists
+    BEFORE scoring — pre-filtered vector search. The inverted lists keep
+    every corpus column, so the predicate composes with partition pruning:
+    the scan reads the probed list directories and pushes the predicate
+    into them, rather than post-filtering an oversampled top-k' result.
+    """
+    partials = _probed_scan(index, queries, nprobe, id_col, vec_col, where,
+                            partial(per_query_topk, k=k, id_col=id_col))
     w = Window.partitionBy("query_id").orderBy("distance", id_col)
     return (partials.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))
+
+
+ivf_search_bulk = ivf_search  # the name perfbench's IVF serve calls
 
 
 def ivf_range_search(index: IVFIndex, queries: DataFrame, radius: float,
@@ -479,13 +460,13 @@ def ivf_range_search(index: IVFIndex, queries: DataFrame, radius: float,
     """ANN radius query (Milvus-style range search): every vector in the
     probed lists with dot-product distance < ``radius``.
 
-    Strictly cheaper than ``ivf_search``: same broadcast probe join, but the
-    radius predicate is row-local, so there is NO per-query window and NO
-    shuffle after the scan — the missing-neighbor risk is only list pruning
-    (vectors in un-probed lists), identical to top-k's. Output:
-    (query_id, vec_id, distance)."""
-    return (_probed_distances(index, queries, nprobe, id_col, vec_col, where)
-            .filter(F.col("distance") < F.lit(radius)))
+    Strictly cheaper than ``ivf_search``: the same scan, but the radius
+    cut is row-local, so there is NO window and NO shuffle after it. The
+    missing-neighbor risk is only list pruning (vectors in un-probed
+    lists), identical to top-k's. Output: (query_id, vec_id, distance)."""
+    return _probed_scan(index, queries, nprobe, id_col, vec_col, where,
+                        partial(per_query_within, radius=radius,
+                                id_col=id_col))
 
 
 def compact_hot_lists(spark: SparkSession, index_path: str,
@@ -627,7 +608,7 @@ def knn_graph(corpus: DataFrame, k: int = 3, nlist: int | None = None,
     """Approximate k-NN graph over the WHOLE corpus → (src, dst, distance,
     rank): every vector is simultaneously a query and a candidate.
 
-    The serve path (ivf_search) broadcasts its query batch — correct for a
+    The serve path (ivf_search) collects its query batch — correct for a
     bounded batch, impossible when the query side IS the corpus. Here both
     sides meet in ONE shuffle each on list_id (a cogroup): the query side
     fans out to its nprobe nearest lists, the candidate side sits in its

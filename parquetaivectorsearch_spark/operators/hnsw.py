@@ -693,13 +693,12 @@ def hnsw_search(graph: DataFrame, queries: DataFrame, k: int = 20,
 def hnsw_search_filtered(graph: DataFrame, queries: DataFrame,
                          allowed: DataFrame, k: int = 20,
                          params: HNSWParams | None = None,
-                         oversample: float = 2.0,
                          id_col: str = "vec_id") -> DataFrame:
     """Metadata-FILTERED graph search — the FAISS IDSelector use case,
     realized as the published pre/post-filter hybrid: measure the
     filter's selectivity (two cheap aggs), OVER-SEARCH each partition
-    graph at k' = ceil(k / selectivity) · oversample (so the unfiltered
-    beam surfaces enough allowed survivors), then broadcast-semi-join
+    graph at k' = ceil(k / selectivity) · FILTERED_ANN_OVERSAMPLE (so the
+    unfiltered beam surfaces enough allowed survivors), then semi-join
     the allowed id set and keep the filtered top-k. Traversal stays
     unfiltered — the graph's navigability must not be cut by the
     predicate (filtering DURING traversal strands the beam in
@@ -731,7 +730,8 @@ def hnsw_search_filtered(graph: DataFrame, queries: DataFrame,
         return spark.createDataFrame(
             [], "query_id BIGINT, vec_id BIGINT, distance DOUBLE")
     sel = n_allowed / max(n_total, 1)
-    kk = min(int(np.ceil(k / max(sel, 1e-6)) * oversample), max(n_total, k))
+    kk = min(math.ceil(k / max(sel, 1e-6)) * FILTERED_ANN_OVERSAMPLE,
+             max(n_total, k))
     cand = hnsw_search(graph, queries, k=kk, params=params)
     allowed_ids = allowed.select(F.col(id_col).alias("vec_id"))
     side = admission_build_side(n_allowed, queries.count(), kk)
@@ -785,39 +785,39 @@ def admission_build_side(n_allowed: int, n_queries: int, kk: int,
 #: (1.40s vs 2.67s, and 4× at 0.005) — the log-midpoint of the
 #: measured bracket [0.05, 0.5] is the pinned switch point.
 FILTERED_ANN_CROSSOVER_SEL = 0.15
+#: Filtered graph over-search: k' = ceil(k / sel) · this, in both the
+#: strategy and the search, so their k' cannot drift apart.
+FILTERED_ANN_OVERSAMPLE = 2
 
 
-def filtered_ann_strategy(n_total: int, n_allowed: int, k: int,
-                          oversample: float = 2.0,
-                          crossover_sel: float = FILTERED_ANN_CROSSOVER_SEL
-                          ) -> str:
+def filtered_ann_strategy(n_total: int, n_allowed: int, k: int) -> str:
     """Pick the serving path for metadata-filtered top-k (VERDICT r10
     #8 — the auto_index-style crossover, measured not asserted; numbers
     in SCALING.md §filtered-ANN and the FILTERED_ANN_CROSSOVER_SEL
     note):
 
     - ``"hnsw_oversearch"`` (hnsw_search_filtered): mild filters. The
-      beam over-searches at k' = ceil(k/sel)·oversample — cheap while
-      k' stays near k.
+      beam over-searches at k' = ceil(k/sel)·FILTERED_ANN_OVERSAMPLE —
+      cheap while k' stays near k.
     - ``"ivf_prefilter"`` (ann.ivf_search(where=...)): selective
       filters below the measured crossover. Probe cost is flat in sel
       while over-search grows as k/sel; measured 1.9× cheaper at
-      sel=0.05 and 4× at 0.005.
+      sel=0.05 and 4× at 0.005. Those figures (and the 0.15 switch)
+      predate ivf_search's move from a broadcast probe join to its one
+      probed-union scan, which only made this side cheaper.
     - ``"exact_filtered"``: degenerate filters — k' would reach the
       whole graph (the "index" is a full scan with extra steps), or the
       allowed set is so small (≤ 32·k rows) that the exact KNN over
       just those rows beats any index, with recall 1.0 by definition
       (the IVF path's recall decays here: 0.923 measured at sel=0.005
       because rare allowed rows hide in unprobed lists)."""
-    import math as _math
-
     if n_total <= 0 or n_allowed <= 0:
         return "exact_filtered"
     sel = n_allowed / n_total
-    kk = _math.ceil(k / sel) * oversample
+    kk = math.ceil(k / sel) * FILTERED_ANN_OVERSAMPLE
     if kk >= n_total or n_allowed <= 32 * k:
         return "exact_filtered"
-    if sel < crossover_sel:
+    if sel < FILTERED_ANN_CROSSOVER_SEL:
         return "ivf_prefilter"
     return "hnsw_oversearch"
 

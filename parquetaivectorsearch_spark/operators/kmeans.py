@@ -26,7 +26,7 @@ cannot compile at the reference's own regime of d=1536, k≥256):
 - ``arrow`` (k·d > _LITERAL_KD_MAX): the centroid matrix rides to the
   executors as a broadcast numpy array; ONE ``mapInArrow`` pass per
   round computes the batch argmin as a single matmul
-  (‖x‖² − 2·X·Cᵀ + ‖c‖², the operators/ann.py ivf_search_bulk shape)
+  (‖x‖² − 2·X·Cᵀ + ‖c‖², the operators/ann.py ivf_search shape)
   and emits per-batch PARTIAL SUMS (cid, Σx, n) — manual map-side
   combine, ≤ k rows of d doubles per Arrow batch, so the shuffle is
   O(batches·k·d) regardless of corpus size. Partials merge per cid in

@@ -71,7 +71,19 @@ def per_query_topk(ids: np.ndarray, scores: np.ndarray, q_ids: np.ndarray,
         cand = finite[_tie_safe_cut(kj[finite], min(k, len(finite)))]
         rows.append(cand)
         cols.append(np.full(len(cand), j))
-    r, c = np.concatenate(rows), np.concatenate(cols)
+    return _pairs_batch(ids, scores, q_ids, np.concatenate(rows),
+                        np.concatenate(cols), id_col, score_col)
+
+
+def per_query_within(ids, scores, q_ids, radius: float,
+                     id_col: str = "vec_id") -> pa.RecordBatch:
+    """per_query_topk's radius twin: every (row, query) pair with
+    score < ``radius`` (masked +inf never passes)."""
+    return _pairs_batch(ids, scores, q_ids, *np.nonzero(scores < radius),
+                        id_col, "distance")
+
+
+def _pairs_batch(ids, scores, q_ids, r, c, id_col, score_col):
     return pa.RecordBatch.from_arrays(
         [pa.array(np.asarray(q_ids)[c].astype(np.int64), pa.int64()),
          pa.array(np.asarray(ids)[r].astype(np.int64), pa.int64()),

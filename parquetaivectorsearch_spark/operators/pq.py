@@ -468,13 +468,13 @@ def ivf_pq_search(index, codes_df: DataFrame, codebooks: np.ndarray,
     ``pq_encode(assigned, books, extra_cols=("list_id",))``); persist it
     partitioned by list_id and the probe becomes a partition-pruned scan.
 
-    Probe semantics are bit-identical to ivf_search/ivf_search_bulk (the
-    same driver-side centroid arithmetic), and the mask follows
-    ivf_search_bulk: the probed-list UNION is scanned once, every batch
-    scores all queries with one LUT gather, and (query, row) pairs the
-    query did not probe are masked out after the gather — transfer =
-    probed code bytes, full stop. The per-batch shortlist cut is
-    tie-inclusive (operators/knn.per_query_topk): exact ADC ties at the
+    The probe step is ivf_search's (ann.probe_mask: the same driver-side
+    query pull and centroid arithmetic; an empty query batch probes
+    nothing), and the scan has its shape: the probed-list UNION is read
+    once, every batch scores all queries with one LUT gather, and (query,
+    row) pairs the query did not probe are masked out after the gather —
+    transfer = probed code bytes, full stop. The per-batch shortlist cut
+    is tie-inclusive (operators/knn.per_query_topk): exact ADC ties at the
     boundary all reach the global (approx_score desc, id) window, which
     picks the id-winning row, so the ranking equals the flat ADC scan's.
 
@@ -493,12 +493,10 @@ def ivf_pq_search(index, codes_df: DataFrame, codebooks: np.ndarray,
     (pinned in tests/test_pq.py)."""
     from parquetaivectorsearch_spark.operators.ann import probe_mask
 
-    q_ids, q_mat = query_batch(queries)  # bounded: the serving batch
+    q_ids, q_mat, union, mask_mat = probe_mask(index, queries, nprobe)
     # rotation (OPQ) applies to the LUT query only; the coarse offset
     # term below stays in raw space — orthogonality preserves <q, r̂>
     luts = _luts(q_mat, codebooks, rotation)
-
-    union, mask_mat = probe_mask(index, q_mat, nprobe)
     # residual offsets: off[q, u] = <query_q, raw-space centroid of
     # union list u> — the coarse term of the IVFADC decomposition
     off = (q_mat @ index.centroids.astype(np.float64)[union, :q_mat.shape[1]].T

@@ -58,8 +58,9 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("ann_knn_join")  # rows-only: approximate results
 def q_ann_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch-of-queries ANN join: 8 query vectors fan out to their probed
-    lists only — the IVF counterpart of the exact `knn_join`."""
+    """Batch-of-queries ANN join: one scan of the 8 queries' probed-list
+    union, each row scored only for the queries that probed its list —
+    the IVF counterpart of the exact `knn_join`."""
     emb = _t(spark, sf_dir, "embeddings")
     index = ANN.IVFIndex.build(emb, nlist=10)
     queries = emb.filter(F.col("vec_id") < 8).select(
@@ -70,19 +71,16 @@ def q_ann_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("ann_ivf_bulk")  # rows-only: approximate results
 def q_ann_ivf_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-bulk IVF serve (operators/ann.ivf_search_bulk): the probed-
-    list UNION is scanned once and every Arrow batch scores all 8 queries
-    in one matmul, vs ivf_search's broadcast probe join which duplicates
-    each matched row per probing query through the pandas scorer — ~nprobe
-    × the Arrow bytes at the reference's 1536-dim width (BENCH_NOTES r8,
-    wide_ivf_bulk_8q). Same probe sets (identical centroid arithmetic on
-    the driver) ⇒ identical ids; pinned vs ivf_search and the exact KNN in
+    """IVF serve of an 8-query batch at top-20 (operators/ann.ivf_search):
+    the probed-list UNION is scanned once and every Arrow batch scores all
+    8 queries in one matmul, masked to each query's probed lists. Pinned
+    against a probe-restricted brute force and the exact KNN in
     tests/test_ann.py. Carries the standard recall column."""
     emb = _t(spark, sf_dir, "embeddings")
     index = ANN.IVFIndex.build(emb, nlist=10)
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
-    out = ANN.ivf_search_bulk(index, queries, k=20, nprobe=8)
+    out = ANN.ivf_search(index, queries, k=20, nprobe=8)
     return _with_recall(out, emb, queries, k=20)
 
 
@@ -97,14 +95,14 @@ def q_ann_ivf_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     65k-row driver sample whose tail-cluster starvation silently
     degrades quantizer quality at 100 TB; driver pulls stay ≤ 4l
     rows/seed-round + nlist×d doubles/Lloyd-round). Same serve path as
-    ann_ivf_bulk (Arrow-bulk probed-union scan), same recall column —
+    ann_ivf_bulk (the probed-union scan), same recall column —
     the end-to-end evidence that the full-corpus trainer slots into the
     reference's build→search flow (Program.cs:125-227) unchanged."""
     emb = _t(spark, sf_dir, "embeddings")
     index = ANN.IVFIndex.build(emb, nlist=10, trainer="distributed")
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
-    out = ANN.ivf_search_bulk(index, queries, k=20, nprobe=8)
+    out = ANN.ivf_search(index, queries, k=20, nprobe=8)
     return _with_recall(out, emb, queries, k=20)
 
 
@@ -288,8 +286,8 @@ def q_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-20 quality. The two approximations compose multiplicatively:
     rows × bytes, the only tier whose hot set stays RAM-resident at the
     reference's corpus × 1000 (Program.cs:26 holds raw floats). 8-query
-    serving batch; probe arithmetic identical to ivf_search, mask
-    identical to ivf_search_bulk; carries the standard recall column."""
+    serving batch; probe step and mask shared with ivf_search
+    (ann.probe_mask); carries the standard recall column."""
     from parquetaivectorsearch_spark.operators import pq as PQ
 
     emb = _t(spark, sf_dir, "embeddings")

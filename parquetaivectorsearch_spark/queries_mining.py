@@ -31,7 +31,7 @@ Scale notes (the shapes that survive 100 TB):
   training batch, not the corpus); the corpus-side scan is one pass and
   the per-anchor top-k shuffles only the filtered candidate stream keyed
   by anchor — at a real 100 TB serve the same query rides the bulk IVF
-  path (operators/ann.ivf_search_bulk) instead of the exact window;
+  path (operators/ann.ivf_search) instead of the exact window;
 - skip-gram pairs never positional-self-join: pairs materialize inside
   the row via arrays_zip on shifted slices, then one explode feeds a
   count agg with map-side combine (shuffle keys are (center, context),
@@ -89,7 +89,7 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: broadcast anchors → scan-side label filter → window top-5 per
     anchor, tie-break (distance, vec_id). The shuffle carries only
     (anchor, candidate) rows that survived the label filter; at a real
-    100 TB mine the anchor batch rides operators/ann.ivf_search_bulk
+    100 TB mine the anchor batch rides operators/ann.ivf_search
     (probed-list union scanned once, label mask applied post-matmul)."""
     emb = _t(spark, sf_dir, "embeddings")
     a = emb.where(F.col("vec_id") < _N_ANCHORS).select(

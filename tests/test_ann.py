@@ -3,8 +3,6 @@ round-trip equality, embedding-dedup clone recovery (SURVEY.md §5)."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from parquetaivectorsearch_spark.operators import ann as ANN
@@ -111,7 +109,7 @@ def test_distributed_trainer_recall_parity_and_determinism(spark):
     assert c1.shape[1] == x.shape[1] + 1
 
 
-def test_ivf_persist_load_roundtrip(spark):
+def test_ivf_persist_load_roundtrip(spark, tmp_path):
     """Persist → load must return the identical result set (the reference's
     own checksum-after-deserialize check, Program.cs:223-227)."""
     emb = load_table(spark, SF_SMOKE, "embeddings")
@@ -119,20 +117,25 @@ def test_ivf_persist_load_roundtrip(spark):
     index = ANN.IVFIndex.build(emb, nlist=10)
     mem = {(r.query_id, r.vec_id, round(r.distance, 6))
            for r in ANN.ivf_search(index, queries, k=20, nprobe=4).collect()}
-    path = tempfile.mkdtemp(prefix="ivf_rt_") + "/index"
+    path = str(tmp_path / "index")
     index.save(spark, path)
     loaded = ANN.IVFIndex.load(spark, path)
     disk = {(r.query_id, r.vec_id, round(r.distance, 6))
             for r in ANN.ivf_search(loaded, queries, k=20, nprobe=4).collect()}
     assert mem == disk
+    # plan guard: a loaded-index search is one probed-union scan scored
+    # by mapInArrow, with no probe join
+    plan = ANN.ivf_search(loaded, queries, k=20, nprobe=4) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "Join" not in plan, plan
 
 
-def test_ivf_partition_pruning(spark):
+def test_ivf_partition_pruning(spark, tmp_path):
     """The persisted lists must be probed via partition pruning: the scan of
     a 2-probe search reads only the probed list_id directories."""
     emb = load_table(spark, SF_SMOKE, "embeddings")
     index = ANN.IVFIndex.build(emb, nlist=10)
-    path = tempfile.mkdtemp(prefix="ivf_pp_") + "/index"
+    path = str(tmp_path / "index")
     index.save(spark, path)
     loaded = ANN.IVFIndex.load(spark, path)
     pruned = loaded.lists.filter(F.col("list_id").isin([0, 1]))
@@ -271,7 +274,7 @@ def test_knn_graph_pruned_recall(spark):
     assert len(per_src) == 200
 
 
-def test_compact_hot_lists_splits_skew_and_preserves_results(spark):
+def test_compact_hot_lists_splits_skew_and_preserves_results(spark, tmp_path):
     """IVF maintenance: plant a heavily skewed corpus (one cell holds half
     the vectors), persist, compact. The hot list must split (max size
     drops, nlist grows), ids stay contiguous with the centroid matrix, the
@@ -294,7 +297,7 @@ def test_compact_hot_lists_splits_skew_and_preserves_results(spark):
     corpus = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<FLOAT>")
 
     index = ANN.IVFIndex.build(corpus, nlist=4)
-    path = tempfile.mkdtemp(prefix="ivf_compact_") + "/index"
+    path = str(tmp_path / "index")
     index.save(spark, path)
 
     queries = corpus.filter(F.col("vec_id") < 4).select(
@@ -323,7 +326,7 @@ def test_compact_hot_lists_splits_skew_and_preserves_results(spark):
     assert after == before
 
 
-def test_compact_hot_lists_skips_degenerate_split(spark):
+def test_compact_hot_lists_skips_degenerate_split(spark, tmp_path):
     """An all-identical hot list collapses the seeded 2-means (every member
     re-assigns to one side). Dynamic partition overwrite would then leave
     the absent partition's old files alive and duplicate the list — the
@@ -340,7 +343,7 @@ def test_compact_hot_lists_skips_degenerate_split(spark):
         rows.append((i, [float(x) for x in v / np.linalg.norm(v)]))
     corpus = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<FLOAT>")
     index = ANN.IVFIndex.build(corpus, nlist=4)
-    path = tempfile.mkdtemp(prefix="ivf_degen_") + "/index"
+    path = str(tmp_path / "index")
     index.save(spark, path)
 
     before_idx = ANN.IVFIndex.load(spark, path)
@@ -367,10 +370,10 @@ def test_compact_hot_lists_skips_degenerate_split(spark):
     assert after == before
 
 
-def test_compact_hot_lists_noop_on_balanced_index(spark):
+def test_compact_hot_lists_noop_on_balanced_index(spark, tmp_path):
     emb = load_table(spark, SF_SMOKE, "embeddings")
     index = ANN.IVFIndex.build(emb, nlist=8)
-    path = tempfile.mkdtemp(prefix="ivf_noop_") + "/index"
+    path = str(tmp_path / "index")
     index.save(spark, path)
     summary = ANN.compact_hot_lists(spark, path, hot_ratio=6.0)
     assert summary["hot"] == []
@@ -435,31 +438,69 @@ def test_ivf_index_stats_invariants(spark):
     assert rows[0].imbalance >= 1.0
 
 
-def test_ivf_search_bulk_matches_ivf_search(spark):
-    """The Arrow-bulk serve path must return the same ids as the broadcast
-    probe-join path at the SAME nprobe (probe sets are computed with the
-    same centroid arithmetic), and equal the exact brute-force KNN at full
-    probe. Fixture neighbor gaps dwarf the float32-vs-sequential-fold
-    scoring difference, so id-set equality is stable."""
-    from parquetaivectorsearch_spark.operators import knn as KNN
+def test_ivf_kernel_matches_probe_restricted_brute_force(spark):
+    """The one IVF scoring kernel against numpy: for nprobe 3 and 8, with
+    and without ``where=``, top-k and radius return exactly the
+    (query_id, vec_id) set of a float64 brute force over each query's
+    own lists as probe_lists (the distributed probe) picks them — so the
+    driver-side probe_mask and probe_lists agree. Full probe equals the
+    exact knn_join. Fixture neighbor gaps and the sparse 0.9 radius
+    boundary dwarf the float32 batch-scoring error."""
+    from functools import reduce
+
+    import numpy as np
+    from pyspark.sql import DataFrame
+
+    from parquetaivectorsearch_spark.functions.vector import arrow_matrix
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     index = ANN.IVFIndex.build(emb, nlist=8)
-    queries = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
+    index.lists = index.lists.localCheckpoint()  # assign once, search 8×
+    queries = _queries(emb, n=4)
+    t = index.lists.select("vec_id", "list_id", "label", "embedding").toArrow()
+    ids, lids = t.column("vec_id").to_numpy(), t.column("list_id").to_numpy()
+    label3 = t.column("label").to_numpy() == 3
+    x = arrow_matrix(t.column("embedding"), np.float64)
+    q_ids = np.arange(4)
+    dist = 1.0 - x @ x[[int(np.flatnonzero(ids == q)[0]) for q in q_ids]].T
+    k, radius = 10, 0.9
 
-    for nprobe in (3, 8):
-        a, b = {}, {}
-        for r in ANN.ivf_search(index, queries, k=10, nprobe=nprobe).collect():
-            a.setdefault(r.query_id, set()).add(r.vec_id)
-        for r in ANN.ivf_search_bulk(index, queries, k=10, nprobe=nprobe).collect():
-            b.setdefault(r.query_id, set()).add(r.vec_id)
-        assert a == b, nprobe
+    def brute(probes, keep):
+        topk, within = set(), set()
+        for j, q in enumerate(q_ids):
+            rows = np.flatnonzero(np.isin(lids, probes[q]) & keep)
+            best = rows[np.lexsort((ids[rows], dist[rows, j]))[:k]]
+            topk |= {(int(q), int(i)) for i in ids[best]}
+            within |= {(int(q), int(i))
+                       for i in ids[rows[dist[rows, j] < radius]]}
+        return topk, within
 
-    exact = {}
-    for r in KNN.knn_join(emb, queries, k=10).collect():
-        exact.setdefault(r.query_id, set()).add(r.vec_id)
-    assert b == exact  # full probe == exact
+    probed3 = {}
+    for r in ANN.probe_lists(queries, index, 3).collect():
+        probed3.setdefault(r.query_id, []).append(r.list_id)
+    cases = [(nprobe, probes, where, keep)
+             for nprobe, probes in ((3, probed3),
+                                    (8, {q: range(8) for q in q_ids}))
+             for where, keep in ((None, np.ones(len(ids), bool)),
+                                 (F.col("label") == 3, label3))]
+    # every run in ONE collect, tagged: 2i = top-k, 2i+1 = radius, -1 = exact
+    frames = [knn.knn_join(emb, queries, k=k)
+              .select(F.lit(-1).alias("run"), "query_id", "vec_id")]
+    for i, (nprobe, _, where, _) in enumerate(cases):
+        frames += [
+            ANN.ivf_search(index, queries, k=k, nprobe=nprobe, where=where)
+            .select(F.lit(2 * i).alias("run"), "query_id", "vec_id"),
+            ANN.ivf_range_search(index, queries, radius=radius,
+                                 nprobe=nprobe, where=where)
+            .select(F.lit(2 * i + 1).alias("run"), "query_id", "vec_id")]
+    got = {}
+    for r in reduce(DataFrame.union, frames).collect():
+        got.setdefault(r.run, set()).add((r.query_id, r.vec_id))
+    for i, (nprobe, probes, where, keep) in enumerate(cases):
+        want_topk, want_within = brute(probes, keep)
+        assert got.get(2 * i) == want_topk, (nprobe, where)
+        assert got.get(2 * i + 1) == want_within, (nprobe, where)
+    assert got[4] == got[-1]  # full probe (case 2: nprobe 8, no where) == exact
 
 
 def test_semantic_dedup_prune_keeps_one_per_clone_group(spark):
@@ -529,7 +570,7 @@ def test_auto_index_picks_tier_by_measured_crossover(spark):
 
 def test_bulk_topk_tie_break_on_id_with_duplicates(spark):
     """ADVICE r8: exact-duplicate vectors tie at the batch-k boundary, and
-    the per-batch partial top-k in ivf_search_bulk / knn_graph must keep
+    the per-batch partial top-k in ivf_search / knn_graph must keep
     the id-winning rows (lexsort, not argpartition) or the global
     (distance, id) window ranks whichever ids happened to survive the
     cut. Corpus: 12 exact copies of one vector — top-5 MUST be the 5
@@ -557,7 +598,7 @@ def test_bulk_topk_tie_break_on_id_with_duplicates(spark):
         StructType([StructField("query_id", LongType()),
                     StructField("query_vec", ArrayType(FloatType()))]))
     got = sorted(r.vec_id
-                 for r in ANN.ivf_search_bulk(index, q, k=5, nprobe=1)
+                 for r in ANN.ivf_search(index, q, k=5, nprobe=1)
                  .collect())
     assert got == [0, 1, 2, 3, 4], got
     # knn_graph: every duplicate's neighbors are the LOWEST other dup ids

@@ -117,6 +117,33 @@ def test_ivf_range_search_degenerate(spark):
     assert tight.count() == 0
 
 
+def test_ivf_kernels_on_empty_query_batch(spark):
+    """A 0-row query frame probes no list: top-k, radius and IVFPQ search
+    each return an empty frame with their output schema instead of
+    failing in the probe matmul."""
+    import numpy as np
+
+    from parquetaivectorsearch_spark.operators import ann as ANN
+    from parquetaivectorsearch_spark.operators import pq as PQ
+
+    vecs = _vecs(spark, [(0, [1.0] * 8), (1, [-1.0] * 8)])
+    index = ANN.IVFIndex.build(vecs, nlist=1)
+    none = vecs.filter(F.col("vec_id") < 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vec"))
+    top = ANN.ivf_search(index, none, k=5, nprobe=1)
+    assert top.columns == ["query_id", "vec_id", "distance", "rank"]
+    assert top.count() == 0
+    near = ANN.ivf_range_search(index, none, radius=100.0, nprobe=1)
+    assert near.columns == ["query_id", "vec_id", "distance"]
+    assert near.count() == 0
+    books = np.zeros((2, 2, 4))  # m=2 subspaces × 2 codewords × 4 dims
+    codes = PQ.pq_encode(index.lists, books, extra_cols=("list_id",))
+    short = PQ.ivf_pq_search(index, codes, books, none, nprobe=1)
+    assert short.columns == ["query_id", "vec_id", "approx_score"]
+    assert short.count() == 0
+
+
 def test_maxsim_and_matryoshka_shapes_on_fixture(spark):
     """The row-local MaxSim and two-stage matryoshka queries hold their
     exact k=10 bound on the smoke fixture (second scale besides the

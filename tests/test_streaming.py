@@ -85,12 +85,10 @@ def test_streaming_dedup_across_batches(spark):
     assert out.count() == n_distinct
 
 
-def test_streaming_ivf_ingest_matches_batch_assignment(spark):
+def test_streaming_ivf_ingest_matches_batch_assignment(spark, tmp_path):
     """Streamed vectors must land in exactly the list the batch assignment
     would give them; the final index must cover the full corpus with no
     loss or duplication across micro-batches."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from parquetaivectorsearch_spark.operators.ann import assign_lists
@@ -98,7 +96,7 @@ def test_streaming_ivf_ingest_matches_batch_assignment(spark):
     from parquetaivectorsearch_spark.streaming.vectors import build_then_stream_rest
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    work = tempfile.mkdtemp(prefix="ivf_stream_t_")
+    work = str(tmp_path)
     index = build_then_stream_rest(spark, emb, work, nlist=8, n_stream_files=4)
 
     total = emb.count()
@@ -118,10 +116,8 @@ def test_streaming_ivf_ingest_matches_batch_assignment(spark):
     assert streamed == expected
 
 
-def test_streaming_ivf_ingest_serves_after_append(spark):
+def test_streaming_ivf_ingest_serves_after_append(spark, tmp_path):
     """The appended lists must be searchable through the normal serve path."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from parquetaivectorsearch_spark.operators.ann import ivf_search
@@ -129,7 +125,7 @@ def test_streaming_ivf_ingest_serves_after_append(spark):
     from parquetaivectorsearch_spark.streaming.vectors import build_then_stream_rest
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    work = tempfile.mkdtemp(prefix="ivf_stream_s_")
+    work = str(tmp_path)
     index = build_then_stream_rest(spark, emb, work, nlist=8)
     queries = emb.filter(F.col("vec_id") == 1).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
@@ -172,14 +168,12 @@ def test_rocksdb_state_store_matches_default(spark):
     assert rocks == base and len(base) > 0
 
 
-def test_stream_ingest_then_compact_cycle(spark):
+def test_stream_ingest_then_compact_cycle(spark, tmp_path):
     """The full index-maintenance loop: streamed appends around one hot key
     skew a list; compact_hot_lists restores the size contract without
     touching membership. Ties streaming/vectors.py to
     operators/ann.compact_hot_lists — the two halves the module docstrings
     promise compose."""
-    import tempfile
-
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -193,7 +187,7 @@ def test_stream_ingest_then_compact_cycle(spark):
     from tests.conftest import SF_SMOKE
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    work = tempfile.mkdtemp(prefix="ivf_cycle_")
+    work = str(tmp_path)
     index = IVFIndex.build(emb, nlist=4)
     index.save(spark, f"{work}/index")
 

@@ -3,7 +3,7 @@
 Two ways to serve "top-k under a metadata predicate":
 
 - hnsw_oversearch (operators/hnsw.hnsw_search_filtered): traverse the
-  graph UNfiltered at k' = ceil(k/sel)·oversample, admission-filter the
+  graph UNfiltered at k' = ceil(k/sel)·FILTERED_ANN_OVERSAMPLE, admission-filter the
   beam — the FAISS IDSelector shape. Cost grows as k' ~ k/sel: cheap at
   mild filters, pathological as sel → 0 (the beam re-ranks the whole
   graph to surface 10 allowed rows).
@@ -94,7 +94,8 @@ def main():
         allowed = emb.filter(pred).select("vec_id") \
             .localCheckpoint(eager=True)
         n_allowed = allowed.count()
-        kk = min(int(math.ceil(K / max(n_allowed / n, 1e-6)) * 2), n)
+        kk = min(math.ceil(K / max(n_allowed / n, 1e-6))
+                 * H.FILTERED_ANN_OVERSAMPLE, n)
 
         exact = {}
         for r in knn.knn_join(emb.join(allowed, "vec_id"), queries,
