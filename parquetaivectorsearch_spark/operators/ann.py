@@ -20,7 +20,7 @@ chasing structure that does not distribute. The Spark-native equivalent of
 - **search**: nearest-nprobe centroids per query (tiny, on the driver) →
   ONE scan of the probed-list union → one matmul per Arrow batch, masked
   to each query's own lists → per-query top-k through the same
-  (distance, id) window as the exact path.
+  driver-side (distance, id) merge as the exact path (knn.merge_topk).
 
 **Metric handling.** The reference's metric is dot-product distance over
 vectors that are unit-norm in its dataset (Program.cs:29-30) but not in
@@ -58,7 +58,8 @@ from pyspark.sql.window import Window
 
 from parquetaivectorsearch_spark.functions.vector import arrow_list, arrow_matrix
 from parquetaivectorsearch_spark.operators.knn import (
-    per_query_topk, per_query_within, query_batch)
+    id_in, merge_topk, per_query_topk, per_query_within, query_batch,
+    task_topk)
 
 METRICS = ("ip", "cosine", "l2")
 
@@ -398,14 +399,16 @@ def probe_mask(index: IVFIndex, queries: DataFrame, nprobe: int
 
 
 def _probed_scan(index: IVFIndex, queries: DataFrame, nprobe: int,
-                 id_col: str, vec_col: str, where, cut) -> DataFrame:
+                 id_col: str, vec_col: str, where, cut,
+                 per_task=None) -> DataFrame:
     """The IVF scoring kernel: ONE scan of the probed-list union (``where``
-    filters the lists, the list_id isin prunes them — partition pruning
+    filters the lists, the list_id ``IN`` prunes them — partition pruning
     on a persisted artifact); each Arrow batch scores every query with
     one float32 matmul into float64 distances, masks the (row, query)
     pairs whose query did not probe the row's list to +inf, and emits
-    ``cut(ids, dist[rows, nq], q_ids)`` as (query_id, id_col, distance).
-    Transfer is the probed bytes; the queries ride the closure."""
+    ``cut(ids, dist[rows, nq], q_ids)`` as (query_id, id_col, distance);
+    ``per_task`` maps a task's stream of cuts when given. Transfer is the
+    probed bytes; the queries ride the closure."""
     q_ids, q_mat, union, mask_mat = probe_mask(index, queries, nprobe)
     q32 = q_mat.astype(np.float32)
 
@@ -420,9 +423,10 @@ def _probed_scan(index: IVFIndex, queries: DataFrame, nprobe: int,
             yield cut(batch.column(id_col).to_numpy(), dist, q_ids)
 
     lists = index.lists if where is None else index.lists.filter(where)
-    return (lists.filter(F.col("list_id").isin([int(x) for x in union]))
+    return (lists.filter(id_in("list_id", union))
             .select("list_id", id_col, vec_col)
-            .mapInArrow(score,
+            .mapInArrow(score if per_task is None
+                        else lambda batches: per_task(score(batches)),
                         f"query_id BIGINT, {id_col} BIGINT, distance DOUBLE"))
 
 
@@ -434,9 +438,11 @@ def ivf_search(index: IVFIndex, queries: DataFrame, k: int = 20,
     (distance, id).
 
     ``queries`` (query_id, query_vec) is a bounded serving batch, pulled
-    to the driver when this is called (the knn_join_bulk contract).
-    _probed_scan keeps each batch's tie-inclusive top-k per query; one
-    window over k × n_batches × n_queries rows merges them.
+    to the driver (the knn_join_bulk contract). _probed_scan keeps each
+    batch's tie-inclusive top-k per query and each task's top-k over its
+    batches; knn.merge_topk merges the ≤ tasks·nq·k survivors on the
+    driver. Runs when called (one scan job); the returned local frame
+    holds the answer.
 
     ``where``: optional metadata predicate (a Column) applied to the lists
     BEFORE scoring — pre-filtered vector search. The inverted lists keep
@@ -445,10 +451,9 @@ def ivf_search(index: IVFIndex, queries: DataFrame, k: int = 20,
     into them, rather than post-filtering an oversampled top-k' result.
     """
     partials = _probed_scan(index, queries, nprobe, id_col, vec_col, where,
-                            partial(per_query_topk, k=k, id_col=id_col))
-    w = Window.partitionBy("query_id").orderBy("distance", id_col)
-    return (partials.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+                            partial(per_query_topk, k=k, id_col=id_col),
+                            partial(task_topk, k=k, id_col=id_col))
+    return merge_topk(index.lists.sparkSession, partials.toArrow(), k, id_col)
 
 
 ivf_search_bulk = ivf_search  # the name perfbench's IVF serve calls

@@ -59,6 +59,7 @@ from __future__ import annotations
 
 import heapq
 import math
+import os
 import re
 from collections import OrderedDict
 from functools import partial
@@ -75,7 +76,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from parquetaivectorsearch_spark.functions.vector import arrow_list, arrow_matrix
-from parquetaivectorsearch_spark.operators.knn import query_batch
+from parquetaivectorsearch_spark.operators.knn import merge_topk, query_batch
 
 __all__ = ["HNSWParams", "build_hnsw", "write_hnsw", "read_hnsw",
            "hnsw_search", "hnsw_append", "hnsw_compact"]
@@ -362,8 +363,8 @@ def _graph_knn(x: np.ndarray, matrix_layers, entry0: int,
 
 
 # ---------------------------------------------------------------------------
-# Serve-time graph parts: one loader for persisted and in-memory graphs, a
-# per-Python-worker cache of loaded parts, one driver-side top-k merge
+# Serve-time graph parts: one loader for persisted and in-memory graphs and
+# a per-Python-worker cache of loaded parts
 # ---------------------------------------------------------------------------
 
 _HITS = pa.schema([("query_id", pa.int64()), ("vec_id", pa.int64()),
@@ -500,17 +501,6 @@ def _part_files(graph: DataFrame) -> list[list[str]] | None:
     return [sorted(by_part[p]) for p in sorted(by_part)]
 
 
-def _merge_topk(hits: pa.Table, k: int) -> pa.Table:
-    """Global top-k per query: sort by (query_id, distance, vec_id) and
-    keep each query's first k rows."""
-    hits = hits.sort_by([("query_id", "ascending"), ("distance", "ascending"),
-                         ("vec_id", "ascending")])
-    q = hits.column("query_id").to_numpy()
-    first = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
-    rank = np.arange(len(q)) - np.repeat(first, np.diff(np.r_[first, len(q)]))
-    return hits.filter(pa.array(rank < k))
-
-
 # ---------------------------------------------------------------------------
 # Spark integration
 # ---------------------------------------------------------------------------
@@ -588,12 +578,44 @@ def read_hnsw(spark, path: str) -> DataFrame:
     default vector-carrying layout no re-binding is needed; a
     topology-only graph re-binds via ``hnsw_search(corpus=...)``.
 
+    The schema is given, not inferred (inference is one Spark job per
+    read): ``_GRAPH_SCHEMA``, less ``embedding`` when one data file's
+    footer shows a topology-only graph.
+
     The returned frame is marked as a persisted graph: handed to
     ``hnsw_search`` as is, it is served from worker-resident parts. Any
     frame derived from it is an ordinary frame."""
-    graph = spark.read.parquet(path)
+    schema = _stored_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    graph = reader.parquet(path)
     graph._hnsw_persisted = True
     return graph
+
+
+def _stored_schema(path: str) -> T.StructType | None:
+    """The graph schema ``write_hnsw`` left under ``path``, from the
+    footer of its first data file (read through pyarrow.fs); None when
+    there is no data file to read."""
+    try:
+        fs, root = pafs.FileSystem.from_uri(path)
+    except pa.ArrowInvalid:  # a relative local path
+        fs, root = pafs.LocalFileSystem(), os.path.abspath(path)
+
+    def listing(d):
+        found = fs.get_file_info(pafs.FileSelector(d, allow_not_found=True))
+        return sorted((i for i in found
+                       if not i.base_name.startswith(("_", "."))),
+                      key=lambda i: i.path)
+
+    for entry in listing(root):
+        files = [entry] if entry.is_file else listing(entry.path)
+        files = [f.path for f in files if f.is_file]
+        if files:
+            if "embedding" in pq.read_schema(files[0], filesystem=fs).names:
+                return _GRAPH_SCHEMA
+            return T.StructType(
+                [f for f in _GRAPH_SCHEMA if f.name != "embedding"])
+    return None
 
 
 def hnsw_append(spark, path: str, new_vecs: DataFrame, n_partitions: int = 1,
@@ -620,14 +642,10 @@ def hnsw_append(spark, path: str, new_vecs: DataFrame, n_partitions: int = 1,
      .partitionBy("part_id").parquet(path))
 
 
-MAX_QUERY_BATCH = 10_000
-
-
 def hnsw_search(graph: DataFrame, queries: DataFrame, k: int = 20,
                 params: HNSWParams | None = None,
                 corpus: DataFrame | None = None,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                max_query_batch: int = MAX_QUERY_BATCH) -> DataFrame:
+                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """KNNSearch analog (Program.cs:216-219), distributed: every query fans
     out to every partition graph; each graph beam-searches its own nodes;
     the global answer is the k best across partitions (the merge the
@@ -650,7 +668,8 @@ def hnsw_search(graph: DataFrame, queries: DataFrame, k: int = 20,
       (reference-parity persistence), where it re-binds vectors by
       explicit vec_id join.
 
-    Both end in one driver-side merge of at most P·nq·k survivors."""
+    Both end in one driver-side merge of at most P·nq·k survivors
+    (knn.merge_topk)."""
     p = params or HNSWParams()
     parts = None
     if "embedding" not in graph.columns:
@@ -666,17 +685,9 @@ def hnsw_search(graph: DataFrame, queries: DataFrame, k: int = 20,
     elif getattr(graph, "_hnsw_persisted", False):
         parts = _part_files(graph)
     spark = graph.sparkSession
-    # Serving-side fan-out: the query batch ships to every partition
-    # graph, so it must be small BY CONTRACT — and the contract is enforced,
-    # not assumed: limit(max+1) bounds the driver pull no matter what the
-    # caller hands us, and one row over the cap raises instead of silently
-    # collecting a million queries. Batch big query sets upstream.
-    q_ids, q_mat = query_batch(queries.limit(max_query_batch + 1), np.float32)
-    if len(q_ids) > max_query_batch:
-        raise ValueError(
-            f"hnsw_search query batch exceeds max_query_batch="
-            f"{max_query_batch}; split the queries into batches (the serve "
-            f"path ships the batch to every partition graph)")
+    # the batch ships to every partition graph: query_batch enforces
+    # knn.MAX_QUERY_BATCH
+    q_ids, q_mat = query_batch(queries, np.float32)
     ef = p.ef_search
     if parts is not None:
         hits = spark.range(0, len(parts), 1, max(len(parts), 1)).mapInArrow(
@@ -687,7 +698,7 @@ def hnsw_search(graph: DataFrame, queries: DataFrame, k: int = 20,
                 [_search_part(_load_part(tbl), q_ids, q_mat, k, ef)])
 
         hits = graph.groupBy("part_id").applyInArrow(search, _HITS_DDL)
-    return spark.createDataFrame(_merge_topk(hits.toArrow(), k))
+    return merge_topk(spark, hits.toArrow(), k).drop("rank")
 
 
 def hnsw_search_filtered(graph: DataFrame, queries: DataFrame,

@@ -14,8 +14,13 @@ generalization of ``results.OrderBy(a => a.Distance).Take(20)``
 state. The ANN path (operators/ann.py) must match this oracle at
 recall@k ≥ 0.9 (SURVEY.md §5).
 
-No ``collect()`` anywhere: the query vector is a 1-row DataFrame (from a
-``vec_id`` lookup or a literal array), broadcast by hint.
+The single-query forms take the query as a 1-row DataFrame (from a
+``vec_id`` lookup or a literal array), broadcast by hint. The bounded
+serve kernels (``knn_join_bulk``, ``ann.ivf_search``, the PQ shortlist
+and re-rank, ``hnsw.hnsw_search``) pull their query batch to the driver
+(``query_batch``: no Spark job for a frame ``createDataFrame`` built),
+score in one mapInArrow job and merge its ≤ tasks·nq·k survivors on the
+driver (``merge_topk``) into a local frame: they run when called.
 """
 
 from __future__ import annotations
@@ -23,8 +28,10 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.window import Window
 
 from parquetaivectorsearch_spark.functions.vector import (
@@ -61,8 +68,9 @@ def per_query_topk(ids: np.ndarray, scores: np.ndarray, q_ids: np.ndarray,
     ``scores[rows, nq]`` of one Arrow batch, each query keeps its
     tie-inclusive ``k`` smallest (``largest``: largest) finite scores —
     masked ±inf entries are skipped — as one RecordBatch (query_id,
-    id_col, score_col). The caller's global (score, id) window owns the
-    final order, which makes the boundary-tied superset exact."""
+    id_col, score_col). The caller's (score, id) merge (``task_topk`` +
+    ``merge_topk``, or a window) owns the final order, which makes the
+    boundary-tied superset exact."""
     keys = -scores if largest else scores
     rows, cols = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
     for j in range(len(q_ids)):
@@ -91,13 +99,120 @@ def _pairs_batch(ids, scores, q_ids, r, c, id_col, score_col):
         names=["query_id", id_col, score_col])
 
 
+#: Largest driver-resident frame ``driver_pull`` takes through
+#: ``collect()``, which runs no Spark job, instead of ``toArrow()``, which
+#: runs one. Measured on a 4-core host (median of 7-9 pulls), collect
+#: against toArrow: 8 rows of 1536 floats 0.04 s against 0.09 s, break-even
+#: at ~128 rows (0.8 MB), 1000 rows 0.30 s against 0.12 s; 800 rows of two
+#: longs 0.016 s against 0.056 s, break-even at ~15k rows (0.36 MB).
+LOCAL_PULL_BYTES = 256 << 10
+
+#: Most rows a serving query batch may have: every bounded kernel ships
+#: the batch to each scan task, so big query sets are batched upstream.
+MAX_QUERY_BATCH = 10_000
+
+
+def _local_bytes(df: DataFrame) -> int | None:
+    """Payload bytes of ``df`` when its optimized plan is a LocalRelation
+    (rows the driver already holds, as ``createDataFrame`` makes them;
+    ``select``/``limit``/``drop`` over one fold into it), else None.
+    Spark's estimate counts an array as one element, so each array column
+    adds its first row's length at 8 bytes an element."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        return None
+    size = int(plan.stats().sizeInBytes())
+    rows = plan.data()
+    arrays = [i for i, f in enumerate(df.schema.fields)
+              if isinstance(f.dataType, T.ArrayType)]
+    if arrays and rows.nonEmpty():
+        head = rows.head()
+        size += 8 * rows.size() * sum(
+            head.getArray(i).numElements() for i in arrays
+            if not head.isNullAt(i))
+    return size
+
+
+def driver_pull(df: DataFrame) -> pa.Table:
+    """``df`` as one Arrow table on the driver: a driver-resident frame of
+    at most LOCAL_PULL_BYTES through ``collect()`` (no Spark job), any
+    other through ``toArrow()`` (one job)."""
+    size = _local_bytes(df)
+    if size is None or size > LOCAL_PULL_BYTES:
+        return df.toArrow()
+    schema = to_arrow_schema(df.schema)
+    rows = df.collect()
+    return pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(schema)],
+        schema=schema)
+
+
 def query_batch(queries: DataFrame, dtype=np.float64
                 ) -> tuple[np.ndarray, np.ndarray]:
     """Driver pull of a bounded (query_id, query_vec) serving batch:
-    (ids int64[nq], vectors[nq, d]) through ``toArrow`` + ``arrow_matrix``."""
-    t = queries.select("query_id", "query_vec").toArrow()
+    (ids int64[nq], vectors[nq, d]) through ``driver_pull`` +
+    ``arrow_matrix``. ``limit(MAX_QUERY_BATCH + 1)`` bounds the pull
+    whatever the caller hands in, and one row over the cap raises."""
+    t = driver_pull(queries.select("query_id", "query_vec")
+                    .limit(MAX_QUERY_BATCH + 1))
+    if t.num_rows > MAX_QUERY_BATCH:
+        raise ValueError(
+            f"query batch exceeds MAX_QUERY_BATCH={MAX_QUERY_BATCH}; split "
+            f"the queries into batches (the serve kernels ship the batch "
+            f"to every scan task)")
     return (t.column("query_id").to_numpy().astype(np.int64),
             arrow_matrix(t.column("query_vec"), dtype))
+
+
+def id_in(col: str, ids) -> Column:
+    """``col IN (ids)`` as one parsed SQL expression: ``Column.isin``
+    makes one py4j literal per id (~0.7 ms each), this one call for any
+    count. No ids selects no rows."""
+    ids = np.unique(np.asarray(ids, dtype=np.int64))
+    if not len(ids):
+        return F.lit(False)
+    return F.expr(f"`{col}` IN ({', '.join(map(str, ids.tolist()))})")
+
+
+def _first_k(hits: pa.Table, k: int, id_col: str, score_col: str,
+             largest: bool) -> tuple[pa.Table, np.ndarray]:
+    """Each query's first ``k`` rows by (score, id) and their 1-based
+    ranks, sorted by (query_id, score, id)."""
+    hits = hits.sort_by([("query_id", "ascending"),
+                         (score_col, "descending" if largest else "ascending"),
+                         (id_col, "ascending")])
+    q = hits.column("query_id").to_numpy()
+    first = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
+    rank = np.arange(len(q)) - np.repeat(first, np.diff(np.r_[first, len(q)]))
+    keep = rank < k
+    return hits.filter(pa.array(keep)), rank[keep] + 1
+
+
+def task_topk(cuts, k: int, id_col: str = "vec_id",
+              score_col: str = "distance", largest: bool = False):
+    """The tail of a mapInArrow top-k task: one cut over all the task's
+    per-batch cuts, so each task emits at most nq·k rows whatever its
+    batch count. The cut orders by (score, id), the merge's own order,
+    so no global top-k row is lost."""
+    cuts = [c for c in cuts if c.num_rows]
+    if cuts:
+        yield from _first_k(pa.Table.from_batches(cuts), k, id_col,
+                            score_col, largest)[0].to_batches()
+
+
+def merge_topk(spark: SparkSession, hits: pa.Table, k: int,
+               id_col: str = "vec_id", score_col: str = "distance",
+               largest: bool = False) -> DataFrame:
+    """The driver-side merge of every bounded top-k kernel: sort the
+    (query_id, id, score) survivors by (query_id, score, id), keep each
+    query's first ``k`` and number them in an INT ``rank`` — the order and
+    ties of ``row_number()`` over a (score, id) window, without its
+    exchange. Returns a local frame."""
+    top, rank = _first_k(hits.select(["query_id", id_col, score_col]), k,
+                         id_col, score_col, largest)
+    return spark.createDataFrame(
+        top.append_column("rank", pa.array(rank.astype(np.int32))),
+        f"query_id BIGINT, {id_col} BIGINT, {score_col} DOUBLE, rank INT")
 
 
 def query_vector_df(corpus: DataFrame, vec_id: int,
@@ -177,15 +292,19 @@ def knn_checksum(topk: DataFrame) -> DataFrame:
 def knn_join_bulk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                   id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Bulk KNN join: per-Arrow-batch tie-inclusive top-k via mapInArrow,
-    then a global top-k over the survivors.
+    one cut per task, then the driver-side ``merge_topk``.
 
     Scale shape vs ``knn_join``: the window form shuffles |corpus|×|queries|
-    scored rows; this shuffles only ~batches×|queries|×k survivors — the
-    narrow stage does one numpy matmul per Arrow batch (the reference's
-    SIMD kernel, Program.cs:256/csproj:15, amortized per batch) and emits
-    each query's k best rows of the batch. Distances are float64 matmul,
-    which differs from the sequential Catalyst fold by ~1e-13 relative →
-    rows-only vs the oracle; id-set equality vs exact knn_join is tested.
+    scored rows; here each scan task returns at most |queries|×k
+    survivors to the driver — the narrow stage does one numpy matmul per
+    Arrow batch (the reference's SIMD kernel, Program.cs:256/csproj:15,
+    amortized per batch) and keeps each query's k best rows of the batch.
+    Distances are float64 matmul, which differs from the sequential
+    Catalyst fold by ~1e-13 relative → rows-only vs the oracle; id-set
+    equality vs exact knn_join is tested.
+
+    Runs when called: the query pull (``query_batch``, no job for a local
+    frame) and one scan job; the returned local frame holds the answer.
 
     Output: (query_id, vec_id, distance, rank).
     """
@@ -201,12 +320,9 @@ def knn_join_bulk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                                  q_ids, k)
 
     survivors = corpus.select(id_col, vec_col).mapInArrow(
-        partial_topk, "query_id BIGINT, vec_id BIGINT, distance DOUBLE")
-    w = Window.partitionBy("query_id").orderBy("distance", "vec_id")
-    return (
-        survivors.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+        lambda batches: task_topk(partial_topk(batches), k),
+        "query_id BIGINT, vec_id BIGINT, distance DOUBLE")
+    return merge_topk(corpus.sparkSession, survivors.toArrow(), k)
 
 
 def knn_topk_sql(spark: SparkSession, corpus: DataFrame, query: DataFrame,

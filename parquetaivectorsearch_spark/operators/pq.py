@@ -18,8 +18,8 @@ Spark shape (100 TB posture):
   batch); codes persist as a parquet table ~64× smaller than the vectors,
   the working set that makes a billion-vector scan RAM-resident;
 - ADC search scans only the codes table and keeps each query's
-  tie-inclusive top-shortlist per Arrow batch (shuffles
-  batches×|queries|×shortlist survivor rows);
+  tie-inclusive top-shortlist per Arrow batch and per task; the driver
+  merges the ≤ tasks×|queries|×shortlist survivors (knn.merge_topk);
 - the shortlist is re-ranked exactly against the raw vectors (standard
   PQ + re-rank), so final top-k quality is set by the shortlist depth,
   not the quantization error.
@@ -36,12 +36,12 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from parquetaivectorsearch_spark.functions.vector import arrow_list, arrow_matrix
 from parquetaivectorsearch_spark.operators.kmeans import (
     _merge_partial_sums, _partial_sums)
-from parquetaivectorsearch_spark.operators.knn import per_query_topk, query_batch
+from parquetaivectorsearch_spark.operators.knn import (
+    driver_pull, id_in, merge_topk, per_query_topk, query_batch, task_topk)
 
 
 def _kmeans_books(x: np.ndarray, m: int, k: int,
@@ -370,8 +370,9 @@ def pq_adc_search(codes_df: DataFrame, codebooks: np.ndarray,
     Per query: lut[j, c] = <q_subj, codebook[j, c]> (computed once on the
     driver for the bounded query batch); each compressed vector scores as
     Σ_j lut[j, codes_j] — m lookups, no raw vectors touched. Per-batch
-    tie-inclusive top-`shortlist` cuts, then a global per-query rank — the
-    knn_join_bulk merge shape over a 64×-smaller scan.
+    and per-task top-`shortlist` cuts, then the driver-side per-query
+    merge — the knn_join_bulk shape over a 64×-smaller scan. Runs when
+    called (one scan job); returns a local frame.
 
     Output: (query_id, vec_id, approx_score, rank) — approximate by
     construction (quantization error), feed to ``pq_rerank``.
@@ -398,8 +399,9 @@ def _adc_shortlist(scan: DataFrame, luts: np.ndarray, q_ids: np.ndarray,
                    probe=None) -> DataFrame:
     """The ADC scan of both PQ serve paths: one LUT gather per Arrow
     batch, optional ``probe(scores, list_ids)`` offset/mask, per-batch
-    tie-inclusive cut, then the global (approx_score desc, id) window.
-    Output: (query_id, out_id, approx_score, rank)."""
+    tie-inclusive cut, one cut per task, then knn.merge_topk on the
+    driver by (approx_score desc, id). Runs when called (one job).
+    Output: a local frame (query_id, out_id, approx_score, rank)."""
     m = luts.shape[1]
 
     def partial(batches):
@@ -416,39 +418,56 @@ def _adc_shortlist(scan: DataFrame, luts: np.ndarray, q_ids: np.ndarray,
                                  score_col="approx_score", largest=True)
 
     survivors = scan.mapInArrow(
-        partial, f"query_id BIGINT, {out_id} BIGINT, approx_score DOUBLE")
-    w = Window.partitionBy("query_id").orderBy(F.desc("approx_score"), out_id)
-    return (survivors.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= shortlist))
+        lambda batches: task_topk(partial(batches), shortlist, out_id,
+                                  "approx_score", largest=True),
+        f"query_id BIGINT, {out_id} BIGINT, approx_score DOUBLE")
+    return merge_topk(scan.sparkSession, survivors.toArrow(), shortlist,
+                      out_id, "approx_score", largest=True)
 
 
 def pq_rerank(shortlist_df: DataFrame, corpus: DataFrame, queries: DataFrame,
               k: int = 20, id_col: str = "vec_id",
               vec_col: str = "embedding") -> DataFrame:
-    """Exact re-rank of the ADC shortlist: join back the raw vectors for the
-    shortlisted ids only (a semi-join-sized read), score with the
-    bit-deterministic Catalyst dot fold, keep top-k per query.
+    """Exact re-rank of the ADC shortlist on the driver: one Spark job
+    reads the raw vectors of the shortlisted ids only (an id ``IN``
+    filter pushed into the corpus scan, knn.id_in); each (query, id)
+    pair is scored with ``1 - cumsum(x·q)[-1]`` in float64, the same
+    sequential double fold as functions.vector.dot, so distances equal
+    the canonical Catalyst kernel bit for bit; knn.merge_topk keeps each
+    query's top-k by (distance, id). The shortlist and the query batch
+    reach the driver through knn.driver_pull, which runs no job for the
+    local frames ``pq_adc_search``/``ivf_pq_search`` return. Runs when
+    called.
 
     Output: (query_id, vec_id, distance, rank) — same schema family as the
-    exact knn_join, distances comparable to the canonical oracle.
+    exact knn_join, distances comparable to the canonical oracle."""
+    q_ids, q_mat = query_batch(queries)
+    short = driver_pull(shortlist_df.select("query_id", id_col))
+    s_q = short.column("query_id").to_numpy()
+    s_id = short.column(id_col).to_numpy()
+    vecs = corpus.filter(id_in(id_col, s_id)).select(id_col, vec_col).toArrow()
+    # inner-join semantics: pairs whose id or query is absent drop out
+    x_at, x_ok = _positions(vecs.column(id_col).to_numpy(), s_id)
+    q_at, q_ok = _positions(q_ids, s_q)
+    ok = x_ok & q_ok
+    dist = np.empty(0)
+    if ok.any():
+        x = arrow_matrix(vecs.column(vec_col), np.float64)[x_at[ok]]
+        dist = 1.0 - np.cumsum(x * q_mat[q_at[ok]], axis=1)[:, -1]
+    hits = pa.table({"query_id": pa.array(s_q[ok], pa.int64()),
+                     id_col: pa.array(s_id[ok], pa.int64()),
+                     "distance": pa.array(dist, pa.float64())})
+    return merge_topk(corpus.sparkSession, hits, k, id_col)
 
-    The shortlist side is explicitly broadcast: it is bounded at
-    |query batch| × shortlist rows of (id, id) pairs, while the corpus side
-    is the 100 TB table — without the hint Spark has no size stats for the
-    UDF-produced shortlist and sort-merge-joins, shuffling the ENTIRE wide
-    corpus to rerank a few thousand candidates (measured: the dominant cost
-    of the dim-1536 bench tier)."""
-    from parquetaivectorsearch_spark.functions import vector as V
 
-    cand = F.broadcast(shortlist_df.select("query_id", id_col)).join(
-        corpus.select(id_col, vec_col), id_col)
-    scored = cand.join(F.broadcast(queries), "query_id").select(
-        "query_id", id_col,
-        (F.lit(1.0) - V.dot(vec_col, "query_vec")).alias("distance"),
-    )
-    w = Window.partitionBy("query_id").orderBy("distance", id_col)
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+def _positions(ref: np.ndarray, keys: np.ndarray
+               ) -> tuple[np.ndarray, np.ndarray]:
+    """(index into ``ref`` of each key, whether the key is in ``ref``)."""
+    if not len(ref):
+        return np.zeros(len(keys), np.int64), np.zeros(len(keys), bool)
+    order = np.argsort(ref, kind="stable")
+    at = np.minimum(np.searchsorted(ref[order], keys), len(ref) - 1)
+    return order[at], ref[order[at]] == keys
 
 
 def ivf_pq_search(index, codes_df: DataFrame, codebooks: np.ndarray,
@@ -475,8 +494,9 @@ def ivf_pq_search(index, codes_df: DataFrame, codebooks: np.ndarray,
     row) pairs the query did not probe are masked out after the gather —
     transfer = probed code bytes, full stop. The per-batch shortlist cut
     is tie-inclusive (operators/knn.per_query_topk): exact ADC ties at the
-    boundary all reach the global (approx_score desc, id) window, which
-    picks the id-winning row, so the ranking equals the flat ADC scan's.
+    boundary all reach the (approx_score desc, id) per-task cut and driver
+    merge, which pick the id-winning row, so the ranking equals the flat
+    ADC scan's. Runs when called (one scan job).
 
     ``residual=True`` is the IVFADC scoring rule for residual-encoded
     codes (train_pq_residual + pq_encode(residual_centroids=…)):
@@ -486,9 +506,10 @@ def ivf_pq_search(index, codes_df: DataFrame, codebooks: np.ndarray,
     driver matmul gathered by each row's list_id — no extra shuffle, no
     per-row work beyond one add.
 
-    Output: (query_id, vec_id, approx_score) — the ADC SHORTLIST, to be
-    fed through ``pq_rerank`` for exact distances and ranks (the caller
-    composes the two, e.g. queries_ann.q_ivf_pq_topk). At nprobe = nlist
+    Output: a local frame (query_id, vec_id, approx_score) — the ADC
+    SHORTLIST, to be fed through ``pq_rerank`` for exact distances and
+    ranks (the caller composes the two, e.g. queries_ann.q_ivf_pq_topk).
+    At nprobe = nlist
     the shortlist ids equal the flat pq_adc_search pipeline bit-for-bit
     (pinned in tests/test_pq.py)."""
     from parquetaivectorsearch_spark.operators.ann import probe_mask
@@ -509,8 +530,7 @@ def ivf_pq_search(index, codes_df: DataFrame, codebooks: np.ndarray,
         scores[~mask_mat[upos].T] = -np.inf  # (q, batch) probe mask
         return scores
 
-    scan = codes_df.filter(
-        F.col("list_id").isin([int(x) for x in union])) \
+    scan = codes_df.filter(id_in("list_id", union)) \
         .select("list_id", id_col, "codes")
     return _adc_shortlist(scan, luts, q_ids, shortlist, id_col, id_col,
                           probe).drop("rank")

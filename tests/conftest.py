@@ -43,3 +43,31 @@ def register_views(con, sf_dir: str) -> None:
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
+
+
+def executed_plans_and_jobs(spark, fn):
+    """Run ``fn`` under a fresh job group → (its physical plans, its job
+    count), read back from Spark's status stores."""
+    import uuid
+
+    group = f"plan_guard_{uuid.uuid4().hex}"
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    bus = sc._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        bus.waitUntilEmpty()
+        return list(jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+            store.executionsList()))
+
+    seen = {e.executionId() for e in executions()}
+    sc.setJobGroup(group, "plan and job guard")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    plans = [e.physicalPlanDescription() for e in executions()
+             if e.executionId() not in seen]
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    return plans, len(jobs)

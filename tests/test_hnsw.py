@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from parquetaivectorsearch_spark.operators import hnsw as H
 from parquetaivectorsearch_spark.operators import knn
 from parquetaivectorsearch_spark.sources import load_table
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, executed_plans_and_jobs
 
 
 def _queries(emb, n=8):
@@ -78,31 +78,6 @@ def test_hnsw_topology_only_rebind(spark, tmp_path):
     assert full == rebound
 
 
-def _executed_plans_and_jobs(spark, fn):
-    """Run ``fn`` under a job group → (its physical plans, its job count),
-    read back from Spark's status stores."""
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    bus = sc._jsc.sc().listenerBus()
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def executions():
-        bus.waitUntilEmpty()
-        return list(jvm.scala.jdk.javaapi.CollectionConverters.asJava(
-            store.executionsList()))
-
-    seen = {e.executionId() for e in executions()}
-    sc.setJobGroup("hnsw_serve_guard", "hnsw serve-path guard")
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    plans = [e.physicalPlanDescription() for e in executions()
-             if e.executionId() not in seen]
-    jobs = sc.statusTracker().getJobIdsForGroup("hnsw_serve_guard")
-    return plans, len(jobs)
-
-
 def test_hnsw_search_plan_has_no_corpus_join(spark, tmp_path):
     """The serve path of a persisted graph is join-free and shuffle-free
     (VERDICT r1 item 3): every plan a search executes has no Join and no
@@ -114,7 +89,7 @@ def test_hnsw_search_plan_has_no_corpus_join(spark, tmp_path):
     graph = H.build_hnsw(emb, n_partitions=2)
     path = str(tmp_path / "graph")
     H.write_hnsw(graph, path)
-    plans, jobs = _executed_plans_and_jobs(
+    plans, jobs = executed_plans_and_jobs(
         spark, lambda: H.hnsw_search(H.read_hnsw(spark, path), queries,
                                      k=5).collect())
     assert plans

@@ -49,7 +49,6 @@ def main() -> None:
         f"{_REPO}/PROFILE_{round_tag}_{tag}.json"
     names = sys.argv[4:] or list(HEADLINE)
     plans_dir = Path(_REPO) / "plans" / round_tag
-    plans_dir.mkdir(parents=True, exist_ok=True)
 
     spark = get_spark(f"pavs-profile-{round_tag}",
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
@@ -70,6 +69,7 @@ def main() -> None:
     # plan capture first (cheap, and the construction of iterative
     # queries doubles as the per-query warm pass)
     if os.environ.get("PROFILE_PLANS", "1") != "0":
+        plans_dir.mkdir(parents=True, exist_ok=True)
         for name in names:
             spark.sparkContext.setJobDescription(f"plan: {name}")
             df = qs[name](spark, SF_DIR)
