@@ -47,8 +47,8 @@ def _tie_safe_cut(keys, take: int):
     boundary-tied row with a smaller id before the tie-aware consumer saw
     it; including all boundary ties restores exactness, and the final
     deterministic (value, id) ordering is owned by the consumer — the
-    global window/TakeOrdered on (distance, id) — which every caller
-    already has. Worst case (an all-tied batch) degrades to the full
+    global window, TakeOrdered or merge_topk on (distance, id) — which
+    every caller already has. Worst case (an all-tied batch) degrades to the full
     batch, the same rows a lexsort cut would feed the consumer anyway."""
     n = len(keys)
     if take <= 0:
